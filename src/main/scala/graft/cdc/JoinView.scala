@@ -147,31 +147,6 @@ object JoinView {
     * local-checkpointed so lineage stays O(1) across folds (the persisted-
     * bucket deployment makes this a table write).
     */
-  /** Run two independent eager actions concurrently (guide §2.6: overlap
-    * independent jobs — one action's straggler tail back-fills with the
-    * other's tasks). Results identical to sequential. BOTH sides are always
-    * awaited before any failure propagates: abandoning the in-flight side
-    * on a first-side failure would leave an orphaned writer running into a
-    * caller's retry of the same fold (withCommitRetry re-enters the whole
-    * sequence), turning one retryable conflict into a conflict storm.
-    * (Kept local rather than shared with Qutil.par2: cdc must not depend
-    * on the query layer.)
-    */
-  private def par2[X, Y](fx: => X, fy: => Y): (X, Y) = {
-    val fut = java.util.concurrent.CompletableFuture.supplyAsync(
-      new java.util.function.Supplier[Y] { override def get(): Y = fy })
-    val xe = try Right(fx) catch { case t: Throwable => Left(t) }
-    val ye = try Right(fut.join()) catch {
-      case e: java.util.concurrent.CompletionException => Left(e.getCause)
-      case t: Throwable => Left(t)
-    }
-    (xe, ye) match {
-      case (Right(x), Right(y)) => (x, y)
-      case (Left(t), _) => throw t
-      case (_, Left(t)) => throw t
-    }
-  }
-
   def fold(state: State, batchA: DataFrame, batchB: DataFrame,
       a: Side, b: Side): State = {
     // ONE advancing pass per side, pinned: deltas, the state apply and the
@@ -179,12 +154,13 @@ object JoinView {
     // the batch source (and the standing state) twice more per side.
     // The A/B sides are independent relations, so each pinning pair runs
     // as two overlapped jobs instead of two sequential ones.
-    val (advA, advB) = par2(
+    val spark = batchA.sparkSession
+    val (advA, advB) = Parallel.pair(spark)(
       advancing(state.latestA, batchA, a).localCheckpoint(true),
       advancing(state.latestB, batchB, b).localCheckpoint(true))
     val dA = deltasFromAdv(advA, a)
     val dB = deltasFromAdv(advB, b)
-    val (aNew, bNew) = par2(
+    val (aNew, bNew) = Parallel.pair(spark)(
       applyBatchFromAdv(state.latestA, advA, a).localCheckpoint(true),
       applyBatchFromAdv(state.latestB, advB, b).localCheckpoint(true))
     // Δ(A⋈B) = ΔA ⋈ B_old + A_new ⋈ ΔB; the sign of a pair is the delta
@@ -402,7 +378,7 @@ object JoinView {
     // phases (all no-ops, but each a manifest read + plan + guard check)
     // once per conflict, and under a hot maintenance loop that burns the
     // whole outer budget recomputing work that already landed.
-    par2(
+    Parallel.pair(spark)(
       MaterializedTable.withCommitRetry(spark) {
         mergeLatest(spark, s"$dir/latest_a", batchA, a, numBuckets,
           Some(batchId)) },

@@ -850,6 +850,9 @@ object MaterializedTable {
       // results.
       val distMode = spark.conf.get(
         "spark.graft.materialized.writeDistribution", "hash")
+      require(distMode == "hash" || distMode == "none",
+        s"spark.graft.materialized.writeDistribution must be hash or none, " +
+          s"not $distMode")
       // EXCHANGE FUSION (callers with per-key multiplicity ~1): hash-
       // distribute the INPUT by _bucket and let the caller's combine group
       // by (_bucket, keys) — HashPartitioning(_bucket) satisfies the
@@ -861,21 +864,8 @@ object MaterializedTable {
       val compacted = combine(
         if (fuse) combined.repartition(numBuckets, col("_bucket"))
         else combined)
-      // `rebalance` (measured-NEGATIVE experiment variant, kept conf-gated
-      // for cluster-scale re-testing): the REBALANCE hint instead of a
-      // fixed repartition(numBuckets) — AQE sizes the write tasks from the
-      // exchange's RUNTIME bytes, which needs AQE allowed to change the
-      // cached plan's output partitioning. On the 12-gate merge subset at
-      // sf0.1 this read 105.0 s vs 86.0 s for `hash` (same healthy window,
-      // back-to-back): the per-job AQE re-planning on every merge write
-      // outweighs task coalescing at gate scale. File-per-bucket would be
-      // preserved either way (the dynamic partitionBy writer splits each
-      // task's output per _bucket value).
-      if (distMode == "rebalance") spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
       val out0 = distMode match {
         case "none" => compacted
-        case "rebalance" => compacted.hint("rebalance", col("_bucket"))
         case _ if fuse => compacted // already distributed by _bucket above
         case _ => compacted.repartition(numBuckets, col("_bucket"))
       }

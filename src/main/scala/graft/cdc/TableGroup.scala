@@ -147,46 +147,19 @@ object TableGroup {
       "duplicate table names in one group commit")
     val prior = readRoot(spark, rootDir)
     if (prior.exists(_.lastBatchId >= batchId)) return 0
-    // Member merges run CONCURRENTLY from a small driver pool (guide §2.6:
-    // overlap independent jobs — one member's write tail back-fills the
-    // executors the other's driver think-time leaves idle). Safe because
-    // members are disjoint table dirs whose merges commute, and each is
-    // itself batch-id-guarded: a crashed group retry re-runs ONLY the
-    // members that did not land, in any order. Results are collected in
-    // sorted-name order, so the root swap below is byte-identical to the
-    // old sequential commit.
+    // Member merges run CONCURRENTLY ([[Parallel]]: one member's write
+    // tail back-fills the executors the other's driver think-time leaves
+    // idle). Safe because members are disjoint table dirs whose merges
+    // commute, and each is itself batch-id-guarded: a crashed group retry
+    // re-runs ONLY the members that did not land, in any order. Results
+    // come back in sorted-name order, so the root swap below is
+    // byte-identical to a sequential commit.
     val sorted = batches.sortBy(_.name)
-    val results =
-      if (sorted.size <= 1)
-        sorted.map { tb =>
-          MaterializedTable.merge(spark, s"$rootDir/${tb.name}", tb.rows,
-            tb.keyCols, orderCols, opCol, numBuckets,
-            batchId = Some(batchId), statsCols)
-        }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(sorted.size, 4))
-        try {
-          import scala.jdk.CollectionConverters._
-          val tasks = sorted.map { tb =>
-            new java.util.concurrent.Callable[Int] {
-              override def call(): Int =
-                MaterializedTable.merge(spark, s"$rootDir/${tb.name}",
-                  tb.rows, tb.keyCols, orderCols, opCol, numBuckets,
-                  batchId = Some(batchId), statsCols)
-            }
-          }
-          // invokeAll awaits every member; a failed merge rethrows here
-          // (unwrapped), exactly as the sequential loop propagated it
-          pool.invokeAll(tasks.asJava).asScala.toSeq.map { f =>
-            try f.get()
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                throw e.getCause
-            }
-          }
-        } finally pool.shutdown()
-      }
+    val results = Parallel.all(spark, sorted.map { tb => () =>
+      MaterializedTable.merge(spark, s"$rootDir/${tb.name}", tb.rows,
+        tb.keyCols, orderCols, opCol, numBuckets,
+        batchId = Some(batchId), statsCols)
+    })
     val folded = results.count(_ > 0)
     val versions = sorted.map { tb =>
       val dir = s"$rootDir/${tb.name}"

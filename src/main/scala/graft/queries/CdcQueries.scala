@@ -3024,7 +3024,7 @@ object CdcQueries {
       // (read BEFORE the stream starts — the read-once-then-follow
       // contract); replica clock blsn=-1 predates every feed batch id
       // disjoint replica dirs — the two bootstrap merges overlap (§2.6)
-      Qutil.par2(
+      Parallel.pair(s2)(
         MaterializedTable.merge(s2, repU,
           TableGroup.read(s2, root, "by_user")
             .select(lit(graft.cdc.Op.Insert).as("op"), col("key"),
@@ -3053,7 +3053,7 @@ object CdcQueries {
           .withColumn("_aa", from_json(col("after"), feedSchema))
           .localCheckpoint() // feeds two merges — plan (and parse) once
         // disjoint replica dirs — the per-trigger member folds overlap
-        Qutil.par2(
+        Parallel.pair(s2)(
           MaterializedTable.merge(s2, repU,
             batch.filter(col("table") === "by_user").select(
               col("op"), col("_ak.key").as("key"),

@@ -45,30 +45,6 @@ object Qutil {
   def money(c: Column): Column = c.cast(DecimalType(12, 2))
   def rate(c: Column): Column  = c.cast(DecimalType(4, 2))
 
-  /** Run two independent eager Spark actions concurrently (guide §2.6:
-    * overlap independent jobs so one action's straggler tail back-fills
-    * with the other's tasks). Results identical to running sequentially;
-    * use ONLY for actions with no ordering dependency (disjoint output
-    * dirs / independent materializations).
-    */
-  def par2[X, Y](fx: => X, fy: => Y): (X, Y) = {
-    val fut = java.util.concurrent.CompletableFuture.supplyAsync(
-      new java.util.function.Supplier[Y] { override def get(): Y = fy })
-    // always await BOTH sides before propagating a failure — abandoning
-    // the in-flight side would leave an orphaned writer racing any retry
-    // of the same sequence
-    val xe = try Right(fx) catch { case t: Throwable => Left(t) }
-    val ye = try Right(fut.join()) catch {
-      case e: java.util.concurrent.CompletionException => Left(e.getCause)
-      case t: Throwable => Left(t)
-    }
-    (xe, ye) match {
-      case (Right(x), Right(y)) => (x, y)
-      case (Left(t), _) => throw t
-      case (_, Left(t)) => throw t
-    }
-  }
-
   /** Multiset equality in ONE Spark job / one shuffle: tag each side ±1,
     * union, group by every column, and look for a non-zero net count.
     * Equivalent to the two-directional `a.exceptAll(b).isEmpty &&
@@ -85,10 +61,16 @@ object Qutil {
       s"multisetEq column mismatch: ${a.columns.mkString(",")} vs " +
         b.columns.mkString(","))
     val cols = a.columns.toIndexedSeq.map(col)
-    a.withColumn("_ms", lit(1L))
-      .unionByName(b.withColumn("_ms", lit(-1L)))
-      .groupBy(cols: _*).agg(sum(col("_ms")).as("_net"))
-      .filter(col("_net") =!= 0L)
+    // tag/count names no input column can shadow (Spark resolves names
+    // case-insensitively, so compare that way)
+    def fresh(base: String) = Iterator.iterate(base)(_ + "_")
+      .find(n => !a.columns.exists(_.equalsIgnoreCase(n))).get
+    val tag = fresh("_ms")
+    val net = fresh("_net")
+    a.withColumn(tag, lit(1L))
+      .unionByName(b.withColumn(tag, lit(-1L)))
+      .groupBy(cols: _*).agg(sum(col(tag)).as(net))
+      .filter(col(net) =!= 0L)
       .isEmpty
   }
 }

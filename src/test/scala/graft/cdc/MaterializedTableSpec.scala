@@ -481,5 +481,30 @@ class MaterializedTableSpec extends AnyFunSuite {
     assert(fpb == Map(0 -> 1, 1 -> 1),
       s"hash write distribution should emit one file per bucket: $fpb")
     assert(MaterializedTable.read(s2, dir).count() == 64)
+    // hash and none are the only write distributions
+    s2.conf.set("spark.graft.materialized.writeDistribution", "rebalance")
+    intercept[IllegalArgumentException] {
+      MaterializedTable.merge(s2, dir, rows.take(1).toDF(),
+        Seq("key"), Seq("lsn", "seq"), numBuckets = 2)
+    }
+  }
+
+  test("merge, compact and rebucket commit through committer v2 without a _SUCCESS marker") {
+    import spark.implicits._
+    val s2 = spark.newSession()
+    // a multi-file merge, so compact has an oversized bucket to rewrite
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s2.conf.set("spark.graft.materialized.writeDistribution", "none")
+    import org.apache.spark.sql.functions.col
+    val dir = java.nio.file.Files.createTempDirectory("mt_success").toString + "/t"
+    val rows = (1 to 64).map(i => ev("insert", s"k$i", i.toLong, s"v$i"))
+    MaterializedTable.merge(s2, dir, rows.toDF().repartition(8, col("key")),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 2)
+    assert(MaterializedTable.compact(s2, dir, maxFilesPerBucket = 1) > 0)
+    MaterializedTable.rebucket(s2, dir, 4)
+    assert(MaterializedTable.read(s2, dir).count() == 64)
+    val markers = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      .filter(_.getFileName.toString == "_SUCCESS").count()
+    assert(markers == 0L, "no write may leave a _SUCCESS marker")
   }
 }

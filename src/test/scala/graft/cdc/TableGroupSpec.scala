@@ -1,6 +1,7 @@
 package graft.cdc
 
 import graft.SparkTestSession
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -147,6 +148,62 @@ class TableGroupSpec extends AnyFunSuite {
         TableGroup.read(spark, root, "nope")
       }
       assert(e2.getMessage.contains("not a member"))
+    }
+  }
+
+  test("an interrupted group commit leaves no job running; a retry converges") {
+    withRetain(4) {
+      import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+      import org.apache.spark.sql.functions.{col, udf}
+      val sc = spark.sparkContext
+      val root = tmp()
+      val ord = Seq("lsn", "seq")
+      val slow = udf { (x: Long) => Thread.sleep(200L); x }
+      def members(delayed: Boolean) = {
+        val u = users((1 to 20).map(i => ("insert", s"k$i", i.toLong, i * 10L)): _*)
+        val t = types((1 to 20).map(i => ("insert", s"k$i", s"t${i % 3}", i.toLong)): _*)
+        if (!delayed) batches(u, t)
+        else batches(u.withColumn("lsn", slow(col("lsn"))),
+          t.withColumn("lsn", slow(col("lsn"))))
+      }
+      val starts = new java.util.concurrent.atomic.AtomicInteger(0)
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(
+              _.getProperty("spark.jobGroup.id") == "tg-interrupt"))
+            starts.incrementAndGet()
+      }
+      val thrown = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val writer = new Thread(() => {
+        sc.setJobGroup("tg-interrupt", "interrupted group commit",
+          interruptOnCancel = true)
+        try TableGroup.commit(spark, root, members(delayed = true), ord,
+          batchId = 1L, numBuckets = 4)
+        catch { case e: Throwable => thrown.set(e) }
+        ()
+      })
+      sc.addSparkListener(listener)
+      try {
+        writer.start()
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (starts.get == 0 && System.nanoTime() < deadline) Thread.sleep(5L)
+        assert(starts.get > 0, "the member merges never started")
+        writer.interrupt()
+        writer.join(60000L)
+        assert(!writer.isAlive && thrown.get.isInstanceOf[InterruptedException],
+          s"the commit should rethrow the interrupt: ${thrown.get}")
+        ListenerBusDrain(sc)
+        assert(sc.statusTracker.getActiveJobIds().isEmpty,
+          "no merge job outlives the interrupted commit")
+        val seen = starts.get
+        Thread.sleep(1000L)
+        ListenerBusDrain(sc)
+        assert(starts.get == seen, "no merge job starts after the commit threw")
+      } finally sc.removeSparkListener(listener)
+      assert(TableGroup.readRoot(spark, root).isEmpty, "the root never swapped")
+      TableGroup.commit(spark, root, members(delayed = false), ord,
+        batchId = 1L, numBuckets = 4)
+      assert(snap(root, "by_user").size == 20 && snap(root, "by_type").size == 20)
     }
   }
 
