@@ -126,12 +126,34 @@ object MaterializedTable {
     * self-describing and reject a layout-corrupting numBuckets change.
     * `stats` carries per-bucket [[BucketStats]] for data skipping and
     * metadata-only aggregates (absent per bucket ⇒ reads stay conservative).
+    *
+    * Schema invariant: `schemaJson` covers every column of every live bucket
+    * file, each with a type the parquet reader reads that file's values as
+    * (the same type, or a widening the reader performs, such as int under
+    * long). Reads rely on it — they hand this schema to the parquet reader
+    * instead of inferring one from file footers. It holds by construction:
+    * a merge's touched-bucket read yields every recorded column, so the
+    * merge output, and with it the next manifest, carries all of them
+    * forward; and a merge whose type change the reader cannot widen (long
+    * → double) rewrites every bucket, so no file keeps the old type.
+    *
+    * Tables written before reads took this schema may break the invariant,
+    * and nothing detects it: a merge that touched only buckets older than
+    * a column could drop that column from the manifest, and those buckets'
+    * newer files then read without it, silently; a long → double widening
+    * left the old buckets' long files, and reading them fails with the
+    * parquet reader's type-mismatch error.
     */
   private[cdc] final case class Manifest(
       version: Long, lastBatchId: Long, schemaJson: String,
       buckets: Map[Int, Long],
       numBuckets: Int = -1, bucketCols: Seq[String] = Nil,
-      stats: Map[Int, BucketStats] = Map.empty)
+      stats: Map[Int, BucketStats] = Map.empty) {
+    /** `schemaJson`, parsed once. */
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
 
   private def fsOf(spark: SparkSession, dir: String) = {
     val p = new org.apache.hadoop.fs.Path(dir)
@@ -174,6 +196,10 @@ object MaterializedTable {
     }
     None // unreachable
   }
+
+  private def requireManifest(spark: SparkSession, dir: String): Manifest =
+    readManifest(spark, dir).getOrElse(
+      throw new IllegalArgumentException(s"no materialized state at $dir"))
 
   private def parseManifest(json: String): Manifest = {
     val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
@@ -621,8 +647,7 @@ object MaterializedTable {
     */
   private def manifestAt(spark: SparkSession, dir: String, v: Long)
       : Manifest = {
-    val cur = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
+    val cur = requireManifest(spark, dir)
     require(v <= cur.version,
       s"version $v is not committed (current is ${cur.version})")
     val m =
@@ -676,8 +701,7 @@ object MaterializedTable {
     * is an explicit act with fresh ids. Returns the new version number.
     */
   def restore(spark: SparkSession, dir: String, v: Long): Long = {
-    val cur = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
+    val cur = requireManifest(spark, dir)
     val m = manifestAt(spark, dir, v)
     val newV = cur.version + 1
     writeManifest(spark, dir,
@@ -740,35 +764,55 @@ object MaterializedTable {
   }
 
   /** Read a subset of buckets through the manifest: group the wanted buckets
-    * by the version directory holding them, read each group with that
-    * version as `basePath` (partition inference recovers `_bucket`), and
-    * union by name with null-backfill — different versions may carry
-    * different (evolved) schemas. Path-level pruning: unwanted buckets are
-    * never even listed.
+    * by the version directory holding them and read each group with that
+    * version as `basePath` (partition discovery recovers `_bucket`).
+    * Path-level pruning: unwanted buckets are never even listed.
+    *
+    * Every group reads with the manifest's schema, so building the read
+    * runs no Spark job: without a schema, parquet inference runs one job per
+    * group at plan time. (The relation makes the schema nullable, as an
+    * inferred one is.) A bucket whose files predate a column (schema
+    * evolution) reads it as null; one whose files hold a narrower type (int
+    * under a widened long) is widened by the reader ([[readerWidens]]). The
+    * groups then share one schema and union by position. This relies on the
+    * [[Manifest]] schema invariant.
     */
   private def readBuckets(spark: SparkSession, dir: String, m: Manifest,
       wanted: Seq[Int]): DataFrame = {
     val live = m.buckets.filter { case (b, _) => wanted.contains(b) }
     if (live.isEmpty) return emptyFromSchema(spark, m)
-    val byVersion = live.groupBy(_._2)
-    byVersion.toSeq.sortBy(_._1).map { case (v, bs) =>
+    live.groupBy(_._2).toSeq.sortBy(_._1).map { case (v, bs) =>
       val base = s"$dir/v$v"
       val paths = bs.keys.toSeq.sorted.map(b => s"$base/_bucket=$b")
-      // no mergeSchema: every file under one version directory was written
-      // by that version's single commit job and shares one schema, so one
-      // footer read resolves the group — mergeSchema would read EVERY
-      // file's footer at plan time (O(buckets) driver-side IO per plan).
-      // Cross-VERSION schema drift is what the unionByName below handles.
-      spark.read.option("basePath", base)
+      spark.read.schema(m.schema).option("basePath", base)
         .parquet(paths: _*)
-    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    }.reduce(_.union(_))
   }
 
-  private def emptyFromSchema(spark: SparkSession, m: Manifest): DataFrame = {
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+  private def emptyFromSchema(spark: SparkSession, m: Manifest): DataFrame =
     spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+
+  /** Whether the parquet reader reads values written as `file` under the
+    * type `read`: the same type up to nullability, a numeric widening the
+    * reader performs itself (int → long or double, float → double), or a
+    * struct whose every field reads as a same-named field of `read` (a
+    * field `read` adds reads as null). Long → double is not among the
+    * widenings, so a merge that makes it rewrites every bucket.
+    */
+  private def readerWidens(file: org.apache.spark.sql.types.DataType,
+      read: org.apache.spark.sql.types.DataType): Boolean = {
+    import org.apache.spark.sql.types._
+    (file, read) match {
+      case (IntegerType, LongType | DoubleType) | (FloatType, DoubleType) => true
+      case (f: StructType, r: StructType) =>
+        f.forall(ff => r.find(_.name == ff.name)
+          .exists(rf => readerWidens(ff.dataType, rf.dataType)))
+      case (ArrayType(f, _), ArrayType(r, _)) => readerWidens(f, r)
+      case (MapType(fk, fv, _), MapType(rk, rv, _)) =>
+        readerWidens(fk, rk) && readerWidens(fv, rv)
+      case _ => file == read
+    }
   }
 
   /** The bucketed-merge dataflow shared by [[merge]] (latest-state
@@ -786,6 +830,8 @@ object MaterializedTable {
     * not just the decoder): a NEW incoming column widens the state with old
     * rows null-backfilled; a DROPPED column keeps its historical values on
     * rows that still carry them (a newer incoming winner leaves it null).
+    * A type change the parquet reader cannot widen (long → double) touches
+    * every live bucket, so the whole state is rewritten under the new type.
     *
     * Crash safety: the write target `dir/v{N+1}` is provably unreferenced
     * (manifest versions are monotonic), so a leftover from a crashed
@@ -822,15 +868,9 @@ object MaterializedTable {
     val incoming = updates.withColumn("_bucket", bucketCol(bucketKeyCols, numBuckets))
       .persist()
     try {
-      val touched = graft.BenchPhase.time("mt_touched") {
+      val keyed = graft.BenchPhase.time("mt_touched") {
         incoming.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-      }
-      val combined = prior match {
-        case Some(m) =>
-          readBuckets(spark, dir, m, touched.toIndexedSeq)
-            .unionByName(incoming, allowMissingColumns = true)
-        case None => incoming.toDF()
+          .collect().map(_.getInt(0)).sorted.toSeq
       }
       // Hash-distribute the compacted state by _bucket before the write
       // (Iceberg's write.distribution-mode=hash, and its default for
@@ -861,13 +901,35 @@ object MaterializedTable {
       // unfused shape pays two (agg re-key + write re-key), and the one
       // exchange carries ≈ the same bytes the first of the two did.
       val fuse = fuseBucketExchange && distMode == "hash"
-      val compacted = combine(
-        if (fuse) combined.repartition(numBuckets, col("_bucket"))
-        else combined)
-      val out0 = distMode match {
-        case "none" => compacted
-        case _ if fuse => compacted // already distributed by _bucket above
-        case _ => compacted.repartition(numBuckets, col("_bucket"))
+      def build(touched: Seq[Int]): DataFrame = {
+        val combined = prior match {
+          case Some(m) =>
+            readBuckets(spark, dir, m, touched)
+              .unionByName(incoming, allowMissingColumns = true)
+          case None => incoming.toDF()
+        }
+        val compacted = combine(
+          if (fuse) combined.repartition(numBuckets, col("_bucket"))
+          else combined)
+        distMode match {
+          case "none" => compacted
+          case _ if fuse => compacted // already distributed by _bucket above
+          case _ => compacted.repartition(numBuckets, col("_bucket"))
+        }
+      }
+      // The untouched buckets keep their files, so the new manifest schema
+      // must still read them (the Manifest schema invariant). When the
+      // merge changes a column's type in a way the parquet reader cannot
+      // widen (long → double), every live bucket counts as touched and is
+      // rewritten under the new type. Building either plan runs no job.
+      val (touched, out0) = {
+        val out = build(keyed)
+        prior match {
+          case Some(m) if !readerWidens(m.schema, out.schema) =>
+            val all = (keyed ++ m.buckets.keys).distinct.sorted
+            (all, build(all))
+          case _ => (keyed, out)
+        }
       }
       // MEASURED-NEGATIVE experiment, recorded (r16): deriving the written
       // set + row counts from the staged parquet FOOTERS (no Spark job, no
@@ -1393,15 +1455,14 @@ object MaterializedTable {
     * bucket. An all-null column skips on any comparison bound (comparisons
     * are null-rejecting).
     */
-  private def bucketPossible(m: Manifest,
-      schema: org.apache.spark.sql.types.StructType, zone: String,
+  private def bucketPossible(m: Manifest, zone: String,
       b: Int, bs: Seq[Bound]): Boolean = {
     val stat = m.stats.get(b) match {
       case None => return true
       case Some(s) => s
     }
     def possible(bd: Bound): Boolean = {
-      val f = schema.find(_.name == bd.colName) match {
+      val f = m.schema.find(_.name == bd.colName) match {
         case None => return true
         case Some(f) => f
       }
@@ -1449,15 +1510,15 @@ object MaterializedTable {
     * behavior through it; it never reads data files).
     */
   def matchingBuckets(spark: SparkSession, dir: String,
+      predicate: org.apache.spark.sql.Column): Seq[Int] =
+    matchingBuckets(spark, requireManifest(spark, dir), predicate)
+
+  private def matchingBuckets(spark: SparkSession, m: Manifest,
       predicate: org.apache.spark.sql.Column): Seq[Int] = {
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     val bs = analyzedBounds(spark, m, predicate)
     m.buckets.keys.toSeq.sorted
-      .filter(b => bucketPossible(m, schema, zone, b, bs))
+      .filter(b => bucketPossible(m, zone, b, bs))
   }
 
   /** Stats-pruned read: buckets whose recorded min/max cannot satisfy the
@@ -1468,9 +1529,8 @@ object MaterializedTable {
     */
   def readPruned(spark: SparkSession, dir: String,
       predicate: org.apache.spark.sql.Column): DataFrame = {
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
-    val keep = matchingBuckets(spark, dir, predicate)
+    val m = requireManifest(spark, dir)
+    val keep = matchingBuckets(spark, m, predicate)
     val base = if (keep.isEmpty) emptyFromSchema(spark, m)
       else readBuckets(spark, dir, m, keep)
     base.filter(predicate).drop("_bucket")
@@ -1485,18 +1545,15 @@ object MaterializedTable {
     */
   def lookup(spark: SparkSession, dir: String, key: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
+    val m = requireManifest(spark, dir)
     require(m.numBuckets > 0 && m.bucketCols.nonEmpty,
       s"manifest at $dir predates layout recording — re-merge once to " +
         "record numBuckets/bucketCols, then lookup works")
     require(key.length == m.bucketCols.length,
       s"key arity ${key.length} != bucket columns ${m.bucketCols.mkString(",")}")
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     val lits = m.bucketCols.zip(key).map { case (c, v) =>
-      val dt = schema(c).dataType
+      val dt = m.schema(c).dataType
       val l = Literal(v)
       if (l.dataType == dt) l else Literal(Cast(l, dt, Some(zone)).eval(), dt)
     }
@@ -1524,18 +1581,15 @@ object MaterializedTable {
     */
   def readMatching(spark: SparkSession, dir: String, probe: DataFrame,
       probeKeyCols: Seq[String]): DataFrame = {
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
+    val m = requireManifest(spark, dir)
     require(m.numBuckets > 0 && m.bucketCols.nonEmpty,
       s"manifest at $dir predates layout recording — re-merge once to " +
         "record numBuckets/bucketCols, then readMatching works")
     require(probeKeyCols.length == m.bucketCols.length,
       s"probe arity ${probeKeyCols.length} != bucket columns " +
         m.bucketCols.mkString(","))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
     val typedKeys = probeKeyCols.zip(m.bucketCols).map { case (p, c) =>
-      col(p).cast(schema(c).dataType)
+      col(p).cast(m.schema(c).dataType)
     }
     val touched = probe
       .filter(typedKeys.map(_.isNotNull).reduce(_ && _))
@@ -1564,8 +1618,7 @@ object MaterializedTable {
   def rebucket(spark: SparkSession, dir: String, newNumBuckets: Int,
       statsCols: Seq[String] = Nil): Long = {
     require(newNumBuckets > 0, s"numBuckets must be positive: $newNumBuckets")
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
+    val m = requireManifest(spark, dir)
     require(m.bucketCols.nonEmpty,
       s"manifest at $dir predates layout recording — re-merge once")
     val (fs, _) = fsOf(spark, dir)
@@ -1600,12 +1653,10 @@ object MaterializedTable {
     */
   def keyLayout(spark: SparkSession, dir: String)
       : (Seq[String], org.apache.spark.sql.types.StructType) = {
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
+    val m = requireManifest(spark, dir)
     require(m.bucketCols.nonEmpty,
       s"manifest at $dir predates layout recording — re-merge once")
-    (m.bucketCols, org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType])
+    (m.bucketCols, m.schema)
   }
 
   /** The committed bucket count, for writers that must match the layout
@@ -1694,10 +1745,7 @@ object MaterializedTable {
     * statsCols changes) are omitted rather than answered wrong.
     */
   def statsSummary(spark: SparkSession, dir: String): DataFrame = {
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
-    val schema = org.apache.spark.sql.types.DataType.fromJson(m.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val m = requireManifest(spark, dir)
     val zone = spark.sessionState.conf.sessionLocalTimeZone
     val live = m.buckets.keys.toSeq.sorted
     val stats = live.flatMap(m.stats.get)
@@ -1711,9 +1759,9 @@ object MaterializedTable {
       if (!fullCoverage) Nil
       else stats.flatMap(_.cols.keys).distinct.sorted
         .filter(c => stats.forall(_.cols.contains(c)))
-        .filter(c => schema.exists(_.name == c))
+        .filter(c => m.schema.exists(_.name == c))
     val fold = covered.map { c =>
-      val dt = schema.find(_.name == c).get.dataType
+      val dt = m.schema.find(_.name == c).get.dataType
       val cs = stats.map(_.cols(c))
       // pick argmin/argmax by INTERNAL comparison, but keep the TRANSPORT
       // string — the literal rebuild below goes through the same cast every
@@ -1748,15 +1796,15 @@ object MaterializedTable {
 
   /** Current state snapshot as the manifest names it (bucket column kept).
     *
-    * Scale note: mergeSchema reconciles footers, not data — O(files)
-    * metadata work, not a scan; on a no-evolution table it is a no-op.
-    * An empty state (first batch all tombstones, or every key later
-    * deleted) reconstructs a zero-row relation from the manifest schema —
-    * a partitioned write of zero rows emits no files at all.
+    * Scale note: the read takes its schema from the manifest, so planning
+    * it opens no data file and runs no job; listing the live bucket
+    * directories is its only plan-time IO. An empty state (first batch all
+    * tombstones, or every key later deleted) reconstructs a zero-row
+    * relation from the manifest schema — a partitioned write of zero rows
+    * emits no files at all.
     */
   private[cdc] def readState(spark: SparkSession, dir: String): DataFrame = {
-    val m = readManifest(spark, dir).getOrElse(
-      throw new IllegalArgumentException(s"no materialized state at $dir"))
+    val m = requireManifest(spark, dir)
     if (m.buckets.isEmpty) emptyFromSchema(spark, m)
     else readBuckets(spark, dir, m, m.buckets.keys.toSeq)
   }

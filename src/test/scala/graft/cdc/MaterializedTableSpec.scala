@@ -1,6 +1,9 @@
 package graft.cdc
 
 import graft.SparkTestSession
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -506,5 +509,242 @@ class MaterializedTableSpec extends AnyFunSuite {
     val markers = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .filter(_.getFileName.toString == "_SUCCESS").count()
     assert(markers == 0L, "no write may leave a _SUCCESS marker")
+  }
+
+  /** Each key's bucket under `numBuckets` (the layout's own hash), in one job. */
+  private def bucketsOf(s: SparkSession, keys: Seq[String],
+      numBuckets: Int): Map[String, Int] = {
+    import s.implicits._
+    keys.toDF("key").select(col("key"), pmod(hash(col("key")), lit(numBuckets)))
+      .as[(String, Int)].collect().toMap
+  }
+
+  test("a merge touching only pre-evolution buckets keeps every column in the manifest") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.materialized.retainVersions", "8")
+    // the undistributed, uncoalesced write leaves k1's bucket in several
+    // files after merge 3, so compact below rewrites a strict subset
+    s2.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    s2.conf.set("spark.graft.materialized.writeDistribution", "none")
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_wide").toString + "/t"
+    val bucket = bucketsOf(s2, (1 to 400).map(i => s"k$i"), 4)
+    val k2 = (2 to 400).map(i => s"k$i").find(bucket(_) != bucket("k1")).get
+    val mates = (2 to 400).map(i => s"k$i").filter(bucket(_) == bucket("k1")).take(8)
+    val cols = Seq("op", "key", "lsn", "seq", "a")
+    def merge(df: DataFrame): Unit =
+      MaterializedTable.merge(s2, dir, df, Seq("key"), Seq("lsn", "seq"),
+        numBuckets = 4, statsCols = Seq("a", "b"))
+    merge(Seq(("insert", "k1", 1L, 0L, "A1")).toDF(cols: _*))
+    // a new column b, in a bucket other than k1's
+    merge(Seq(("insert", k2, 2L, 0L, "A2", "B2")).toDF(cols :+ "b": _*))
+    // k1's bucket again, from a batch without b
+    merge((("update", "k1", 3L, 0L, "A1b") +:
+      mates.map(k => ("insert", k, 3L, 0L, s"A_$k"))).toDF(cols: _*))
+
+    val all = Set("op", "key", "lsn", "seq", "a", "b")
+    val expected: Map[String, (Option[String], Option[String])] =
+      Map("k1" -> ((Some("A1b"), None)), k2 -> ((Some("A2"), Some("B2")))) ++
+        mates.map(k => k -> ((Some(s"A_$k"), None)))
+    def rows(df: DataFrame) = df.select("key", "a", "b")
+      .as[(String, Option[String], Option[String])].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    def agree(label: String): Unit = {
+      def same(face: String, df: DataFrame,
+          want: Map[String, (Option[String], Option[String])]): Unit = {
+        assert(df.columns.toSet == all, s"$label: $face columns")
+        assert(rows(df) == want, s"$label: $face rows")
+      }
+      same("read", MaterializedTable.read(s2, dir), expected)
+      for (k <- Seq("k1", k2))
+        same(s"lookup($k)", MaterializedTable.lookup(s2, dir, Seq(k)),
+          expected.filter(_._1 == k))
+      same("readPruned", MaterializedTable.readPruned(s2, dir,
+        col("key").isin("k1", k2)), expected.filter(e => Set("k1", k2)(e._1)))
+      val v = MaterializedTable.readManifest(s2, dir).get.version
+      same("readVersion", MaterializedTable.readVersion(s2, dir, v), expected)
+      val feed = MaterializedTable.changeFeed(s2, dir, 2L, v, Seq("key"))
+      assert(feed.columns.toSet == Set("key", "op") ++ (all - "key")
+        .flatMap(c => Seq(s"before_$c", s"after_$c")), s"$label: feed columns")
+      assert(feed.select("key", "op", "before_a", "after_a", "before_b", "after_b")
+        .as[(String, String, Option[String], Option[String], Option[String],
+          Option[String])].collect().toSet ==
+        (mates.map(k => (k, "insert", None, Some(s"A_$k"), None, None)) :+
+          (("k1", "update", Some("A1"), Some("A1b"), None, None))).toSet,
+        s"$label: feed rows")
+      val (_, schema) = MaterializedTable.keyLayout(s2, dir)
+      assert(schema.fieldNames.toSet - "_bucket" == all, s"$label: keyLayout")
+      val summary = MaterializedTable.statsSummary(s2, dir).head()
+      assert(summary.schema.fieldNames.toSet == Set("rows") ++
+        Seq("a", "b").flatMap(c => Seq(s"min_$c", s"max_$c", s"nulls_$c")),
+        s"$label: statsSummary columns")
+      assert(summary.getAs[Long]("rows") == expected.size)
+      assert(summary.getAs[String]("min_b") == "B2" &&
+        summary.getAs[String]("max_b") == "B2" &&
+        summary.getAs[Long]("nulls_b") == expected.size - 1,
+        s"$label: statsSummary b")
+    }
+
+    agree("after merge 3")
+    assert(MaterializedTable.filesPerBucket(s2, dir)(bucket("k1")) > 1,
+      "fixture: k1's bucket holds several files")
+    assert(MaterializedTable.compact(s2, dir, maxFilesPerBucket = 1) == 1,
+      "compact rewrites k1's bucket only")
+    agree("after compact")
+    MaterializedTable.restore(s2, dir, 3L)
+    agree("after restore")
+  }
+
+  test("building a read runs no Spark job; collecting a lookup runs one") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.materialized.retainVersions", "4")
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_jobs").toString + "/t"
+    MaterializedTable.merge(s2, dir,
+      (1 to 16).map(i => ev("insert", s"k$i", i, s"v$i")).toDF(),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 4)
+    MaterializedTable.merge(s2, dir, Seq(ev("update", "k1", 100, "v1b")).toDF(),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 4)
+    val live = MaterializedTable.readManifest(s2, dir).get.buckets
+    assert(live.values.toSet.size >= 2, s"buckets span two version dirs: $live")
+
+    val sc = s2.sparkContext
+    val marker = "mt-read-jobs"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.marker") == marker)
+          started.incrementAndGet()
+    }
+    def jobsOf(f: => Unit): Int = {
+      started.set(0)
+      sc.setLocalProperty("graft.test.marker", marker)
+      try f finally sc.setLocalProperty("graft.test.marker", null)
+      ListenerBusDrain(sc)
+      started.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      val built = Map[String, () => DataFrame](
+        "lookup" -> (() => MaterializedTable.lookup(s2, dir, Seq("k1"))),
+        "readPruned" -> (() =>
+          MaterializedTable.readPruned(s2, dir, col("key") === "k2")),
+        "read" -> (() => MaterializedTable.read(s2, dir)),
+        "readVersion" -> (() => MaterializedTable.readVersion(s2, dir, 1L)),
+        "changeFeed" -> (() =>
+          MaterializedTable.changeFeed(s2, dir, 1L, 2L, Seq("key"))))
+        .map { case (face, build) => face -> jobsOf(build()) }
+      assert(built.values.forall(_ == 0), s"jobs run while building: $built")
+      var got: Array[org.apache.spark.sql.Row] = null
+      val collected = jobsOf {
+        got = MaterializedTable.lookup(s2, dir, Seq("k1")).collect() }
+      assert(collected == 1, "a lookup's collect is its only job")
+      assert(got.map(_.getAs[String]("after")).toSeq == Seq("v1b"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("type widening across versions: old int files read exactly under the manifest's long") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.materialized.retainVersions", "4")
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_widen").toString + "/t"
+    val bucket = bucketsOf(s2, (1 to 100).map(i => s"k$i"), 4)
+    val k2 = (2 to 100).map(i => s"k$i").find(bucket(_) != bucket("k1")).get
+    val cols = Seq("op", "key", "lsn", "seq", "v")
+    MaterializedTable.merge(s2, dir, Seq(("insert", "k1", 1L, 0L, 7)).toDF(cols: _*),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 4, statsCols = Seq("v"))
+    val big = 5000000000L
+    MaterializedTable.merge(s2, dir, Seq(("insert", k2, 2L, 0L, big)).toDF(cols: _*),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 4, statsCols = Seq("v"))
+    val m = MaterializedTable.readManifest(s2, dir).get
+    assert(m.schema("v").dataType == org.apache.spark.sql.types.LongType)
+    assert(m.buckets(bucket("k1")) == 1L, "k1's bucket keeps its v1 int files")
+
+    def values(df: DataFrame): Map[String, Long] = {
+      assert(df.schema("v").dataType == org.apache.spark.sql.types.LongType)
+      df.select("key", "v").as[(String, Long)].collect().toMap
+    }
+    assert(values(MaterializedTable.read(s2, dir)) == Map("k1" -> 7L, k2 -> big))
+    assert(values(MaterializedTable.lookup(s2, dir, Seq("k1"))) == Map("k1" -> 7L))
+    assert(values(MaterializedTable.readVersion(s2, dir, 2L)) ==
+      Map("k1" -> 7L, k2 -> big))
+    // a long bound past the int range is not truncated against the int file
+    assert(values(MaterializedTable.readPruned(s2, dir, col("v") > 4000000000L)) ==
+      Map(k2 -> big))
+    assert(values(MaterializedTable.readPruned(s2, dir, col("v") < 4000000000L)) ==
+      Map("k1" -> 7L))
+  }
+
+  test("a widening the parquet reader cannot do (long to double) rewrites the old buckets") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.materialized.retainVersions", "4")
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_ltod").toString + "/t"
+    val bucket = bucketsOf(s2, (1 to 100).map(i => s"k$i"), 4)
+    val k2 = (2 to 100).map(i => s"k$i").find(bucket(_) != bucket("k1")).get
+    val cols = Seq("op", "key", "lsn", "seq", "v")
+    def merge(df: DataFrame): Unit =
+      MaterializedTable.merge(s2, dir, df, Seq("key"), Seq("lsn", "seq"),
+        numBuckets = 4, statsCols = Seq("v"))
+    merge(Seq(("insert", "k1", 1L, 0L, 7L)).toDF(cols: _*))
+    merge(Seq(("insert", k2, 2L, 0L, 2.5)).toDF(cols: _*))
+    val m = MaterializedTable.readManifest(s2, dir).get
+    assert(m.schema("v").dataType == org.apache.spark.sql.types.DoubleType)
+    assert(m.buckets(bucket("k1")) == 2L,
+      "k1's bucket is rewritten: its v1 files hold v as INT64")
+
+    def values(df: DataFrame): Map[String, Double] = {
+      assert(df.schema("v").dataType == org.apache.spark.sql.types.DoubleType)
+      df.select("key", "v").as[(String, Double)].collect().toMap
+    }
+    val both = Map("k1" -> 7.0, k2 -> 2.5)
+    assert(values(MaterializedTable.read(s2, dir)) == both)
+    assert(values(MaterializedTable.lookup(s2, dir, Seq("k1"))) == Map("k1" -> 7.0))
+    assert(values(MaterializedTable.readVersion(s2, dir, 2L)) == both)
+    assert(values(MaterializedTable.readPruned(s2, dir, col("v") > 5.0)) ==
+      Map("k1" -> 7.0))
+    val feed = MaterializedTable.changeFeed(s2, dir, 1L, 2L, Seq("key"))
+    assert(feed.select("key", "op", "after_v").as[(String, String, Double)]
+      .collect().toSet == Set((k2, "insert", 2.5)))
+    // the next merge into k1's bucket reads it under the widened type
+    merge(Seq(("update", "k1", 3L, 0L, 8.5)).toDF(cols: _*))
+    assert(values(MaterializedTable.read(s2, dir)) == Map("k1" -> 8.5, k2 -> 2.5))
+  }
+
+  test("every widening the parquet reader performs keeps the old buckets' files") {
+    val s2 = spark.newSession()
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_widens").toString + "/t"
+    val bucket = bucketsOf(s2, (1 to 100).map(i => s"k$i"), 4)
+    val k2 = (2 to 100).map(i => s"k$i").find(bucket(_) != bucket("k1")).get
+    def merge(df: DataFrame): Unit =
+      MaterializedTable.merge(s2, dir, df, Seq("key"), Seq("lsn", "seq"),
+        numBuckets = 4)
+    val big = 5000000000L
+    // v1: i int, f float, s struct<x int>, xs array<int>
+    merge(Seq(("insert", "k1", 1L, 0L, 3, 1.5f, 7))
+      .toDF("op", "key", "lsn", "seq", "i", "f", "x")
+      .select(col("op"), col("key"), col("lsn"), col("seq"), col("i"), col("f"),
+        struct(col("x")).as("s"), array(col("x")).as("xs")))
+    // v2, another bucket: i double, f double, s struct<x long, y string>,
+    // xs array<long>
+    merge(Seq(("insert", k2, 2L, 0L, 0.25, 2.5, big, "y2"))
+      .toDF("op", "key", "lsn", "seq", "i", "f", "x", "y")
+      .select(col("op"), col("key"), col("lsn"), col("seq"), col("i"), col("f"),
+        struct(col("x"), col("y")).as("s"), array(col("x")).as("xs")))
+    val m = MaterializedTable.readManifest(s2, dir).get
+    assert(m.buckets(bucket("k1")) == 1L, "k1's bucket keeps its v1 files")
+    def values(df: DataFrame) = df.select("key", "i", "f", "s.x", "s.y", "xs")
+      .as[(String, Double, Double, Long, Option[String], Seq[Long])].collect().toSet
+    val old = ("k1", 3.0, 1.5, 7L, None, Seq(7L))
+    // the row-based reader takes over where the vectorized one does not apply
+    for (vectorized <- Seq("true", "false")) {
+      s2.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      assert(values(MaterializedTable.read(s2, dir)) ==
+        Set(old, (k2, 0.25, 2.5, big, Some("y2"), Seq(big))), s"vectorized=$vectorized")
+      assert(values(MaterializedTable.lookup(s2, dir, Seq("k1"))) == Set(old),
+        s"vectorized=$vectorized")
+    }
   }
 }
