@@ -59,8 +59,8 @@ import org.apache.spark.sql.functions._
   * orphans the loser's version. So every commit is a compare-and-swap, the
   * Delta/Iceberg discipline: data is staged under a unique `_stage_*`
   * directory, the commit CLAIMS its target version by creating the
-  * versioned manifest record exclusively (create-no-overwrite — atomic on
-  * HDFS-like filesystems, exists-check-then-create on LocalFs), and only
+  * versioned manifest record exclusively (an atomic create-no-overwrite,
+  * [[MetaFile.createExclusive]]), and only
   * the claim holder renames its staging directory into place and swaps the
   * primary manifest. A commit that loses the claim — or whose head moved
   * under it — throws [[ConcurrentCommitException]] after deleting its
@@ -160,42 +160,13 @@ object MaterializedTable {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  /** Read the primary manifest, TOLERATING the sub-atomic window of the
-    * commit swap: on a local/checksummed filesystem the rename's sidecar
-    * moves separately, so a reader racing a writer can transiently see a
-    * missing manifest or a checksum mismatch (the continuous-poll shape of
-    * [[graft.sources.GraftCdfSource]] hits this within seconds). Bounded
-    * retry — and ONLY when a versioned snapshot record proves a writer has
-    * ever committed here; a genuinely fresh directory returns None at
-    * once. After the retry budget the underlying error propagates (a
-    * persistent checksum failure is corruption, not a race).
+  /** The committed manifest, or None when nothing was ever committed at
+    * `dir`. The primary is only ever replaced atomically ([[MetaFile]]),
+    * so a reader racing a commit sees the old or the new one, never a gap.
     */
-  private[cdc] def readManifest(spark: SparkSession, dir: String): Option[Manifest] = {
-    val (fs, hPath) = fsOf(spark, dir)
-    val mPath = new org.apache.hadoop.fs.Path(dir, manifestFile)
-    def everCommitted: Boolean =
-      fs.exists(hPath) && fs.listStatus(hPath).exists(
-        st => VersionedManifestRe.findFirstIn(st.getPath.getName).isDefined)
-    val maxAttempts = 40 // x 50 ms = a 2 s window, far above a rename
-    var attempt = 0
-    while (true) {
-      try {
-        if (fs.exists(mPath)) {
-          val in = fs.open(mPath)
-          val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          return Some(parseManifest(json))
-        }
-        if (!everCommitted || attempt >= maxAttempts) return None
-      } catch {
-        case e: java.io.IOException => // checksum / torn-read race
-          if (attempt >= maxAttempts) throw e
-      }
-      attempt += 1
-      Thread.sleep(50)
-    }
-    None // unreachable
-  }
+  private[cdc] def readManifest(spark: SparkSession, dir: String): Option[Manifest] =
+    MetaFile.read(spark, new org.apache.hadoop.fs.Path(dir, manifestFile))
+      .map(parseManifest)
 
   private def requireManifest(spark: SparkSession, dir: String): Manifest =
     readManifest(spark, dir).getOrElse(
@@ -241,12 +212,10 @@ object MaterializedTable {
       root.get("schema").toString, buckets.toMap, nb, bc, stats)
   }
 
-  /** Commit: write the manifest to a temp name, fsync-close, then
-    * FileContext.rename(OVERWRITE) into place — a true atomic replace on
-    * HDFS/local (plain FileSystem.rename won't overwrite; delete-then-rename
-    * opens a no-manifest window; rename throws instead of returning an
-    * ignorable boolean). Everything before this call is invisible to
-    * readers; everything after it is the new snapshot.
+  /** Commit: replace the primary manifest atomically ([[MetaFile.replace]]:
+    * a temp file renamed over the old one in one step). Everything before
+    * the rename is invisible to readers; everything after it is the new
+    * snapshot.
     *
     * An immutable per-version copy `_graft_manifest.v{N}.json` lands BEFORE
     * the primary swap — it is the snapshot record [[readVersion]] resolves
@@ -293,7 +262,7 @@ object MaterializedTable {
         s""""buckets":$b,"schema":${m.schemaJson}}"""
   }
 
-  private def claimGraceMs(spark: SparkSession): Long =
+  private[cdc] def claimGraceMs(spark: SparkSession): Long =
     spark.conf.get("spark.graft.occ.claimGraceMs", "2000").toLong
 
   /** Total optimistic-commit conflicts absorbed by [[withCommitRetry]] in
@@ -398,40 +367,8 @@ object MaterializedTable {
       s"${retainVersions(spark)} — concurrent retry is only safe at >= 2; " +
       "eager GC can delete the snapshot a racing writer staged from]"
 
-  /** Atomic create-no-overwrite. The Hadoop FileSystem API's
-    * `create(p, overwrite = false)` is an exists-check-then-create on
-    * LocalFs — two racing writers BOTH succeed (observed live in the
-    * two-writer spec: both claimed v1 of a fresh table). For file:// the
-    * claim therefore goes through `File.createNewFile()` (POSIX
-    * O_CREAT|O_EXCL — atomic); content is written after the claim is won,
-    * into a file only the winner owns. On HDFS-like filesystems
-    * `create(false)` is atomic server-side and is used directly.
-    */
-  private[cdc] def tryExclusiveCreate(fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path, bytes: Array[Byte]): Boolean = {
-    val scheme = p.toUri.getScheme
-    if (scheme == null || scheme == "file") {
-      val f = new java.io.File(p.toUri.getPath)
-      Option(f.getParentFile).foreach(_.mkdirs())
-      val won = try f.createNewFile() catch { case _: java.io.IOException => false }
-      if (won) {
-        val os = new java.io.FileOutputStream(f)
-        try os.write(bytes) finally os.close()
-      }
-      won
-    } else {
-      try {
-        val os = fs.create(p, false)
-        try os.write(bytes) finally os.close()
-        true
-      } catch {
-        case e: java.io.IOException => if (fs.exists(p)) false else throw e
-      }
-    }
-  }
-
   /** The commit CAS: CLAIM version `m.version` by creating its versioned
-    * manifest record exclusively ([[tryExclusiveCreate]]). Exactly one
+    * manifest record exclusively ([[MetaFile.createExclusive]]). Exactly one
     * writer per target version can succeed — the one that does owns
     * `v{version}` (the staging rename and the primary swap). A failed
     * claim means a concurrent writer took the version (throw retryable
@@ -445,14 +382,11 @@ object MaterializedTable {
     * run against live writers re-assigning the version).
     */
   private def claimVersion(spark: SparkSession, dir: String, m: Manifest): String = {
-    val (fs, hPath) = fsOf(spark, dir)
-    if (!fs.exists(hPath)) fs.mkdirs(hPath)
     val p = new org.apache.hadoop.fs.Path(dir, versionedManifestFile(m.version))
     val token = java.util.UUID.randomUUID().toString
     // the claim record IS the versioned manifest (parse ignores the extra
     // writer field), so a committed version needs no second write
-    val bytes = manifestJson(m, Some(token)).getBytes("UTF-8")
-    if (!tryExclusiveCreate(fs, p, bytes)) {
+    if (!MetaFile.createExclusive(spark, p, manifestJson(m, Some(token)))) {
       // a LIVE racer publishes its primary within ms of claiming; a CRASHED
       // writer's head never reaches the claimed version. Poll through the
       // grace window to tell them apart.
@@ -478,6 +412,7 @@ object MaterializedTable {
     if (m.version > 1) {
       val head = readManifest(spark, dir).map(_.version).getOrElse(0L)
       if (head != m.version - 1) {
+        val (fs, _) = fsOf(spark, dir)
         fs.delete(p, false)
         throw new ConcurrentCommitException(
           s"commit of v${m.version} at $dir computed against v${m.version - 1} " +
@@ -514,17 +449,9 @@ object MaterializedTable {
   /** The publish half of a commit: atomically swap the primary manifest.
     * Only call holding the [[claimVersion]] claim for `m.version`.
     */
-  private def publishPrimary(spark: SparkSession, dir: String, m: Manifest): Unit = {
-    val (fs, _) = fsOf(spark, dir)
-    val bytes = manifestJson(m).getBytes("UTF-8")
-    val primary = new org.apache.hadoop.fs.Path(dir, manifestFile)
-    val tmp = new org.apache.hadoop.fs.Path(dir, manifestFile + ".tmp")
-    val os = fs.create(tmp, true)
-    try os.write(bytes) finally os.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      primary.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, primary, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def publishPrimary(spark: SparkSession, dir: String, m: Manifest): Unit =
+    MetaFile.replace(spark, new org.apache.hadoop.fs.Path(dir, manifestFile),
+      manifestJson(m))
 
   /** The fence: is the claim for `m.version` still OURS? A [[recover]] run
     * against live writers (operator error) deletes live claims and lets a
@@ -533,16 +460,10 @@ object MaterializedTable {
     * publishing the same version.
     */
   private def claimStillHeld(spark: SparkSession, dir: String,
-      m: Manifest, token: String): Boolean = {
-    val (fs, _) = fsOf(spark, dir)
-    val p = new org.apache.hadoop.fs.Path(dir, versionedManifestFile(m.version))
-    try {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      s.contains(token)
-    } catch { case _: java.io.IOException => false }
-  }
+      m: Manifest, token: String): Boolean =
+    try MetaFile.read(spark, new org.apache.hadoop.fs.Path(dir,
+      versionedManifestFile(m.version))).exists(_.contains(token))
+    catch { case _: java.io.IOException => false }
 
   /** Unique staging path for one commit attempt at `v` — leading `_` keeps
     * readers from globbing it; the uuid keeps concurrent attempts from
@@ -609,6 +530,12 @@ object MaterializedTable {
   private def versionedManifestFile(v: Long) = s"_graft_manifest.v$v.json"
   private val VersionedManifestRe = """_graft_manifest\.v(\d+)\.json""".r
 
+  /** A versioned manifest record a directory listing just returned. */
+  private def readListed(spark: SparkSession, p: org.apache.hadoop.fs.Path)
+      : Manifest =
+    parseManifest(MetaFile.read(spark, p).getOrElse(
+      throw new java.io.FileNotFoundException(p.toString)))
+
   /** How many trailing versions stay fully materialized (readable via
     * [[readVersion]]) — `spark.graft.materialized.retainVersions`. At the
     * default 0, superseded bucket files are garbage-collected eagerly right
@@ -618,7 +545,7 @@ object MaterializedTable {
     * time-travel/retention discipline, and the escape hatch for concurrent
     * long scans named in the class scaladoc.
     */
-  private def retainVersions(spark: SparkSession): Int =
+  private[cdc] def retainVersions(spark: SparkSession): Int =
     spark.conf.get("spark.graft.materialized.retainVersions", "0").toInt
 
   /** Committed versions whose snapshot record is still present, ascending.
@@ -652,18 +579,11 @@ object MaterializedTable {
       s"version $v is not committed (current is ${cur.version})")
     val m =
       if (v == cur.version) cur
-      else {
-        val (fs, _) = fsOf(spark, dir)
-        val p = new org.apache.hadoop.fs.Path(dir, versionedManifestFile(v))
-        if (!fs.exists(p))
-          throw new IllegalStateException(
-            s"version $v of $dir has no snapshot record — written before " +
-              "versioned manifests or pruned by vacuum()")
-        val in = fs.open(p)
-        val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        parseManifest(json)
-      }
+      else parseManifest(MetaFile.read(spark,
+        new org.apache.hadoop.fs.Path(dir, versionedManifestFile(v)))
+        .getOrElse(throw new IllegalStateException(
+          s"version $v of $dir has no snapshot record — written before " +
+            "versioned manifests or pruned by vacuum()")))
     // fail loudly if any referenced bucket was GC'd from under the snapshot
     // — ONE listStatus per distinct version directory instead of a per-
     // bucket exists() sweep (O(versions) metadata calls, not O(buckets))
@@ -846,22 +766,23 @@ object MaterializedTable {
       batchId: Option[Long] = None, statsCols: Seq[String] = Nil,
       fuseBucketExchange: Boolean = false)(
       combine: DataFrame => DataFrame): Int = {
-    val prior = readManifest(spark, dir)
-    // a different numBuckets re-assigns every key's bucket — merging under
-    // it would scatter state across two incompatible layouts. Old manifests
-    // (numBuckets unrecorded ⇒ -1) stay permissive.
-    prior.filter(_.numBuckets > 0).foreach { m =>
-      require(m.numBuckets == numBuckets,
-        s"numBuckets $numBuckets does not match the table's committed " +
-          s"layout (${m.numBuckets}) — changing it requires a full rewrite")
+    // whether this merge still applies on top of `head`
+    def admits(head: Option[Manifest]): Boolean = {
+      // a different numBuckets re-assigns every key's bucket — merging
+      // under it would scatter state across two incompatible layouts. Old
+      // manifests (numBuckets unrecorded ⇒ -1) stay permissive.
+      head.filter(_.numBuckets > 0).foreach { m =>
+        require(m.numBuckets == numBuckets,
+          s"numBuckets $numBuckets does not match the table's committed " +
+            s"layout (${m.numBuckets}) — changing it requires a full rewrite")
+      }
+      // idempotent retry: the committed watermark rides in the manifest, so
+      // "data visible" and "batch recorded" are one atomic event. Batch ids
+      // are monotonic (foreachBatch contract); at-or-below-watermark =
+      // replay.
+      !batchId.exists(id => head.exists(_.lastBatchId >= id))
     }
-    // idempotent retry: the committed watermark rides in the manifest, so
-    // "data visible" and "batch recorded" are one atomic event. Batch ids
-    // are monotonic (foreachBatch contract); at-or-below-watermark = replay.
-    batchId.foreach { id =>
-      if (prior.exists(_.lastBatchId >= id)) return 0
-    }
-    val (fs, _) = fsOf(spark, dir)
+    if (!admits(readManifest(spark, dir))) return 0
     graft.BenchPhase.count("mt_merge")
     // persist: the updates plan feeds both the touched-bucket collect and the
     // combine/write — without this it would execute twice
@@ -872,6 +793,14 @@ object MaterializedTable {
         incoming.select("_bucket").distinct()
           .collect().map(_.getInt(0)).sorted.toSeq
       }
+      // The snapshot this commit builds on is read only now, after the
+      // touched-bucket collect, which does not need it. Under a hot
+      // opposing writer (a maintenance compaction loop) the read→claim
+      // window must be shorter than the opponent's commit period or no
+      // attempt can win (the OCC livelock shape), so no job runs inside it
+      // that does not have to. The read above only rejects early.
+      val prior = readManifest(spark, dir)
+      if (!admits(prior)) return 0
       // Hash-distribute the compacted state by _bucket before the write
       // (Iceberg's write.distribution-mode=hash, and its default for
       // partitioned writes): exactly ONE file per bucket instead of one
@@ -939,54 +868,69 @@ object MaterializedTable {
       // is already O(numBuckets) rows to the driver.
       val out = out0.persist()
       val newV = prior.map(_.version + 1).getOrElse(1L)
-      // stage under a unique dir; the CAS commit below renames it into place
-      val stage = stagePath(dir, newV)
-      graft.BenchPhase.time("mt_write") {
-        // committer v2 + no _SUCCESS marker: the stage dir is private to
-        // this attempt and the ATOMIC commit is the manifest swap below —
-        // v1's job-commit isolation (task dirs renamed one by one by the
-        // driver at job commit) buys nothing here and costs O(tasks)
-        // sequential driver renames per merge
-        out.write.mode("append")
-          .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-          .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-          .partitionBy("_bucket").parquet(stage.toString)
-      }
-      val writtenStats = graft.BenchPhase.time("mt_stats") {
-        bucketStats(out, statsCols) }
-      out.unpersist()
-      val written = writtenStats.keySet
       val oldBuckets = prior.map(_.buckets).getOrElse(Map.empty)
-      val newBuckets = (oldBuckets -- touched) ++ written.map(_ -> newV)
-      // stats follow the bucket map: touched buckets get this merge's fresh
-      // numbers (or drop out with the bucket), untouched carry forward —
-      // their files did not change, so neither did their content summary
-      val oldStats = prior.map(_.stats).getOrElse(Map.empty)
-      val newStats = (oldStats -- touched) ++ writtenStats
-      val newWatermark = math.max(prior.map(_.lastBatchId).getOrElse(-1L),
-        batchId.getOrElse(-1L))
-      // COMMIT — CAS claim + staging rename + primary swap; a concurrent
-      // winner makes this throw ConcurrentCommitException (staging deleted)
-      graft.BenchPhase.time("mt_commit") {
-        commitStaged(spark, dir, stage,
-          Manifest(newV, newWatermark, out.schema.json, newBuckets,
-            numBuckets, bucketKeyCols, newStats))
+      // a concurrent winner makes the commit throw ConcurrentCommitException
+      // (staging deleted)
+      writeAndCommit(spark, dir, newV, out,
+        touched.flatMap(b => oldBuckets.get(b).map(b -> _))) {
+        val writtenStats = graft.BenchPhase.time("mt_stats") {
+          bucketStats(out, statsCols) }
+        out.unpersist()
+        val newBuckets =
+          (oldBuckets -- touched) ++ writtenStats.keySet.map(_ -> newV)
+        // stats follow the bucket map: touched buckets get this merge's
+        // fresh numbers (or drop out with the bucket), untouched carry
+        // forward — their files did not change, so neither did their
+        // content summary
+        val oldStats = prior.map(_.stats).getOrElse(Map.empty)
+        val newStats = (oldStats -- touched) ++ writtenStats
+        val newWatermark = math.max(prior.map(_.lastBatchId).getOrElse(-1L),
+          batchId.getOrElse(-1L))
+        Manifest(newV, newWatermark, out.schema.json, newBuckets,
+          numBuckets, bucketKeyCols, newStats)
       }
-      // post-commit GC of superseded bucket dirs (best-effort: a failure
-      // here leaves unreferenced files for vacuum(), never corruption).
-      // With a retention window configured, GC defers ENTIRELY to vacuum()
-      // so the last retainVersions snapshots stay readVersion-able.
-      if (retainVersions(spark) <= 0) try {
-        for (b <- touched; v <- oldBuckets.get(b)) {
-          val p = new org.apache.hadoop.fs.Path(s"$dir/v$v/_bucket=$b")
-          if (fs.exists(p)) fs.delete(p, true)
-        }
-        pruneEmptyVersionDirs(fs, dir, newV)
-      } catch { case _: java.io.IOException => () }
       touched.length
     } finally {
       incoming.unpersist()
     }
+  }
+
+  /** The tail every data rewrite (merge, [[compact]], [[rebucket]]) shares:
+    * write `out` partitioned by `_bucket` under a unique staging dir, commit
+    * the manifest `manifest` builds once the write is done
+    * ([[commitStaged]]), then garbage-collect the `superseded` (bucket,
+    * version) dirs.
+    *
+    * The write uses committer v2 and no `_SUCCESS` marker: the staging dir
+    * is private to this attempt and the atomic commit is the manifest swap,
+    * so v1's job-commit isolation (task dirs renamed one by one by the
+    * driver) buys nothing and costs O(tasks) sequential driver renames.
+    *
+    * The GC is best-effort (a failure leaves unreferenced files for
+    * [[vacuum]], never corruption). With a retention window configured it
+    * defers entirely to vacuum, so the last `retainVersions` snapshots stay
+    * readable by [[readVersion]].
+    */
+  private def writeAndCommit(spark: SparkSession, dir: String, newV: Long,
+      out: DataFrame, superseded: Iterable[(Int, Long)])(
+      manifest: => Manifest): Unit = {
+    val stage = stagePath(dir, newV)
+    graft.BenchPhase.time("mt_write") {
+      out.write.mode("append")
+        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+        .partitionBy("_bucket").parquet(stage.toString)
+    }
+    val m = manifest
+    graft.BenchPhase.time("mt_commit") { commitStaged(spark, dir, stage, m) }
+    if (retainVersions(spark) <= 0) try {
+      val (fs, _) = fsOf(spark, dir)
+      for ((b, v) <- superseded) {
+        val p = new org.apache.hadoop.fs.Path(s"$dir/v$v/_bucket=$b")
+        if (fs.exists(p)) fs.delete(p, true)
+      }
+      pruneEmptyVersionDirs(fs, dir, newV)
+    } catch { case _: java.io.IOException => () }
   }
 
   /** Drop version directories that no longer hold any bucket directory —
@@ -1051,10 +995,7 @@ object MaterializedTable {
         } else if (v <= horizon && v != m.version) {
           fs.delete(st.getPath, true); removed += 1
         } else if (v < m.version) {
-          val in = fs.open(st.getPath)
-          val json = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          retained += parseManifest(json)
+          retained += readListed(spark, st.getPath)
         }
       case _ => ()
     }
@@ -1156,26 +1097,14 @@ object MaterializedTable {
       else repartitioned.sortWithinPartitions(
         (col("_bucket") +: sortCols.map(col)): _*)
     val newV = m.version + 1
-    val stage = stagePath(dir, newV)
-    // committer v2 + no _SUCCESS: same argument as mergeBuckets — the
-    // manifest swap is the atomic commit, the stage dir is attempt-private
-    out.write.mode("append")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .partitionBy("_bucket").parquet(stage.toString)
-    val newBuckets = m.buckets ++ oversized.map(_ -> newV)
     // stats describe content, and compaction moves bytes, never rows —
     // every bucket's summary carries forward unchanged
-    commitStaged(spark, dir, stage,
-      Manifest(newV, m.lastBatchId, out.schema.json, newBuckets,
-        m.numBuckets, m.bucketCols, m.stats))
-    if (retainVersions(spark) <= 0) try {
-      for (b <- oversized; v <- m.buckets.get(b)) {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/v$v/_bucket=$b")
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      pruneEmptyVersionDirs(fs, dir, newV)
-    } catch { case _: java.io.IOException => () }
+    writeAndCommit(spark, dir, newV, out,
+      oversized.flatMap(b => m.buckets.get(b).map(b -> _))) {
+      Manifest(newV, m.lastBatchId, out.schema.json,
+        m.buckets ++ oversized.map(_ -> newV),
+        m.numBuckets, m.bucketCols, m.stats)
+    }
     oversized.size
   }
 
@@ -1621,29 +1550,17 @@ object MaterializedTable {
     val m = requireManifest(spark, dir)
     require(m.bucketCols.nonEmpty,
       s"manifest at $dir predates layout recording — re-merge once")
-    val (fs, _) = fsOf(spark, dir)
     val state = readState(spark, dir).drop("_bucket")
     val out = state
       .withColumn("_bucket", bucketCol(m.bucketCols, newNumBuckets))
       .localCheckpoint() // feeds the write AND the stats pass
     val newV = m.version + 1
-    val stage = stagePath(dir, newV)
-    out.write.mode("append")
-      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-      .partitionBy("_bucket").parquet(stage.toString)
-    val writtenStats = bucketStats(out, statsCols)
-    commitStaged(spark, dir, stage,
+    writeAndCommit(spark, dir, newV, out, m.buckets) {
+      val writtenStats = bucketStats(out, statsCols)
       Manifest(newV, m.lastBatchId, out.schema.json,
         writtenStats.keys.map(_ -> newV).toMap,
-        newNumBuckets, m.bucketCols, writtenStats))
-    if (retainVersions(spark) <= 0) try {
-      for ((b, v) <- m.buckets) {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/v$v/_bucket=$b")
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-      pruneEmptyVersionDirs(fs, dir, newV)
-    } catch { case _: java.io.IOException => () }
+        newNumBuckets, m.bucketCols, writtenStats)
+    }
     newV
   }
 
@@ -1706,10 +1623,7 @@ object MaterializedTable {
     val rows = fs.listStatus(hPath).toSeq.flatMap { st =>
       st.getPath.getName match {
         case VersionedManifestRe(vs) if vs.toLong <= cur =>
-          val in = fs.open(st.getPath)
-          val m = parseManifest(
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close())
+          val m = readListed(spark, st.getPath)
           val live = m.buckets.keys.toSeq
           val nRows =
             if (live.forall(m.stats.contains))

@@ -56,79 +56,54 @@ object TableGroup {
     */
   final case class TableBatch(name: String, rows: DataFrame, keyCols: Seq[String])
 
+  /** The group root: the batch watermark plus {table → pinned version}. */
   private[graft] final case class GroupManifest(
-      lastBatchId: Long, tables: Map[String, Long])
-
-  private def fsOf(spark: SparkSession, dir: String) = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+      lastBatchId: Long, tables: Map[String, Long]) {
+    /** Canonical JSON: field order fixed, tables sorted by name. The root
+      * file holds exactly these bytes, and graft-group-cdf offsets are
+      * these strings (offset equality is string equality).
+      */
+    def json: String = {
+      val om = new com.fasterxml.jackson.databind.ObjectMapper()
+      val node = om.createObjectNode()
+      node.put("lastBatchId", lastBatchId)
+      val tn = node.putObject("tables")
+      tables.toSeq.sortBy(_._1).foreach { case (t, v) => tn.put(t, v) }
+      om.writeValueAsString(node)
+    }
   }
 
-  private[graft] def readRoot(spark: SparkSession, rootDir: String)
-      : Option[GroupManifest] = {
-    val (fs, _) = fsOf(spark, rootDir)
-    val p = new org.apache.hadoop.fs.Path(rootDir, rootFile)
-    if (!fs.exists(p)) return None
-    // the root swap renames the data file and (on checksummed filesystems,
-    // e.g. Hadoop's LocalFs) its crc sidecar as TWO renames — a reader
-    // polling between them (the graft-group-cdf source's getOffset) sees
-    // new bytes under the old checksum. The data rename itself is atomic,
-    // so content is never torn — retry through the sidecar window, rethrow
-    // if it persists (real corruption must surface)
-    def readOnce(): String = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    }
-    val json = {
-      var attempt = 0
-      var out: Option[String] = None
-      while (out.isEmpty) {
-        try out = Some(readOnce())
-        catch {
-          case e: org.apache.hadoop.fs.ChecksumException =>
-            attempt += 1
-            if (attempt > 5) throw e
-            Thread.sleep(50L * attempt)
-          case _: java.io.FileNotFoundException =>
-            // the exists() above raced the swap's absent window (delete +
-            // rename are two steps on LocalFs): the root vanished between
-            // exists and open. Same condition as !exists — report None and
-            // let pollers fall back to their last-seen root (found live by
-            // the TableGroupSpec race soak, not just by inspection)
-            return None
-        }
+  private[graft] object GroupManifest {
+    def parse(json: String): GroupManifest = {
+      val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
+      val tables = scala.collection.mutable.Map.empty[String, Long]
+      val it = root.get("tables").properties().iterator()
+      while (it.hasNext) {
+        val e = it.next()
+        tables(e.getKey) = e.getValue.asLong()
       }
-      out.get
+      GroupManifest(root.get("lastBatchId").asLong(), tables.toMap)
     }
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val tables = scala.collection.mutable.Map.empty[String, Long]
-    val it = root.get("tables").properties().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      tables(e.getKey) = e.getValue.asLong()
-    }
-    Some(GroupManifest(root.get("lastBatchId").asLong(), tables.toMap))
   }
+
+  private def rootPath(rootDir: String) =
+    new org.apache.hadoop.fs.Path(rootDir, rootFile)
+
+  private def lockPath(rootDir: String) =
+    new org.apache.hadoop.fs.Path(rootDir, "_graft_group.lock")
+
+  /** The committed root, or None before the first group commit. The root is
+    * only ever replaced atomically ([[MetaFile]]), so a poller racing a
+    * commit (the graft-group-cdf source's getOffset) sees the old root or
+    * the new one, never a gap.
+    */
+  private[graft] def readRoot(spark: SparkSession, rootDir: String)
+      : Option[GroupManifest] =
+    MetaFile.read(spark, rootPath(rootDir)).map(GroupManifest.parse)
 
   private def writeRoot(spark: SparkSession, rootDir: String,
-      g: GroupManifest): Unit = {
-    val (fs, hPath) = fsOf(spark, rootDir)
-    if (!fs.exists(hPath)) fs.mkdirs(hPath)
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.createObjectNode()
-    node.put("lastBatchId", g.lastBatchId)
-    val tn = node.putObject("tables")
-    g.tables.toSeq.sortBy(_._1).foreach { case (t, v) => tn.put(t, v) }
-    val bytes = om.writeValueAsString(node).getBytes("UTF-8")
-    val primary = new org.apache.hadoop.fs.Path(rootDir, rootFile)
-    val tmp = new org.apache.hadoop.fs.Path(rootDir, rootFile + ".tmp")
-    val os = fs.create(tmp, true)
-    try os.write(bytes) finally os.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      primary.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, primary, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      g: GroupManifest): Unit =
+    MetaFile.replace(spark, rootPath(rootDir), g.json)
 
   /** Commit one transaction's batches across all member tables, atomically
     * from the group reader's perspective. Returns the number of member
@@ -137,9 +112,7 @@ object TableGroup {
   def commit(spark: SparkSession, rootDir: String, batches: Seq[TableBatch],
       orderCols: Seq[String], batchId: Long, opCol: String = "op",
       numBuckets: Int = 64, statsCols: Seq[String] = Nil): Int = {
-    val retain = spark.conf
-      .get("spark.graft.materialized.retainVersions", "0").toInt
-    require(retain >= 2,
+    require(MaterializedTable.retainVersions(spark) >= 2,
       "group commits need spark.graft.materialized.retainVersions >= 2 " +
         "(current + one crash-lag commit) so root-pinned snapshots survive " +
         "per-table GC until vacuum()")
@@ -192,7 +165,7 @@ object TableGroup {
   }
 
   /** Serialize root swaps: atomic exclusive-create of a lock file
-    * ([[MaterializedTable.tryExclusiveCreate]]) around the
+    * ([[MetaFile.createExclusive]]) around the
     * read-check-rename critical section (held for milliseconds — one JSON
     * read + one rename). A lock held through the WHOLE wait window means
     * its holder crashed mid-swap; that surfaces as
@@ -202,15 +175,11 @@ object TableGroup {
     */
   private def withRootLock[A](spark: SparkSession, rootDir: String)(
       f: (() => Unit) => A): A = {
-    val (fs, hPath) = fsOf(spark, rootDir)
-    if (!fs.exists(hPath)) fs.mkdirs(hPath)
-    val lock = new org.apache.hadoop.fs.Path(rootDir, "_graft_group.lock")
-    val graceMs = spark.conf.get("spark.graft.occ.claimGraceMs", "2000").toLong
-    val tokenStr = java.util.UUID.randomUUID().toString
-    val token = tokenStr.getBytes("UTF-8")
-    val waitMs = 5L * graceMs
+    val lock = lockPath(rootDir)
+    val token = java.util.UUID.randomUUID().toString
+    val waitMs = 5L * MaterializedTable.claimGraceMs(spark)
     val deadline = System.nanoTime() + waitMs * 1000000L
-    while (!MaterializedTable.tryExclusiveCreate(fs, lock, token)) {
+    while (!MetaFile.createExclusive(spark, lock, token)) {
       if (System.nanoTime() > deadline)
         throw new MaterializedTable.StaleCommitClaimException(
           s"group root lock at $rootDir stayed held through the whole " +
@@ -225,12 +194,8 @@ object TableGroup {
     // discipline as MaterializedTable's claim fence).
     val fence: () => Unit = () => {
       val held =
-        try {
-          val in = fs.open(lock)
-          val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          s == tokenStr
-        } catch { case _: java.io.IOException => false }
+        try MetaFile.read(spark, lock).contains(token)
+        catch { case _: java.io.IOException => false }
       if (!held)
         throw new MaterializedTable.ConcurrentCommitException(
           s"group root lock at $rootDir was recovered away mid-commit " +
@@ -251,17 +216,11 @@ object TableGroup {
     // lock and admit a third writer mid-swap. A wedged group is recoverable
     // (recover()); an unverified delete is not.
     try f(fence) finally {
-      def readToken(): Option[String] =
-        try {
-          val in = fs.open(lock)
-          Some(try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close())
-        } catch { case _: java.io.FileNotFoundException => None }
       val attempts = 4
       var verdict: Option[Boolean] = None // Some(ours?) once a read lands
       var i = 0
       while (verdict.isEmpty && i < attempts) {
-        try verdict = Some(readToken().contains(tokenStr))
+        try verdict = Some(MetaFile.read(spark, lock).contains(token))
         catch {
           case _: java.io.IOException =>
             i += 1
@@ -269,7 +228,9 @@ object TableGroup {
         }
       }
       verdict match {
-        case Some(true)  => fs.delete(lock, false)
+        case Some(true)  =>
+          lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(lock, false)
         case Some(false) => // recovered away / re-acquired — not ours to touch
         case None =>
           log.warn(s"group root lock at $lock unreadable after $attempts " +
@@ -287,8 +248,8 @@ object TableGroup {
     * explicit operator action — stop all group writers first.
     */
   def recover(spark: SparkSession, rootDir: String): Int = {
-    val (fs, _) = fsOf(spark, rootDir)
-    val lock = new org.apache.hadoop.fs.Path(rootDir, "_graft_group.lock")
+    val lock = lockPath(rootDir)
+    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(lock) && fs.delete(lock, false)) 1 else 0
   }
 
@@ -318,8 +279,7 @@ object TableGroup {
     */
   def vacuum(spark: SparkSession, rootDir: String): Int = {
     val g = readRoot(spark, rootDir).getOrElse(return 0)
-    val retain = spark.conf
-      .get("spark.graft.materialized.retainVersions", "0").toInt
+    val retain = MaterializedTable.retainVersions(spark)
     g.tables.toSeq.sortBy(_._1).map { case (t, pinned) =>
       val dir = s"$rootDir/$t"
       val cur = readManifestVersion(spark, dir)

@@ -2236,8 +2236,9 @@ object CdcQueries {
     // --- exactly diff(v1→v2) ∪ diff(v2→v3); the per-op rollup must
     // --- hash-match DuckDB's independent three-snapshot double diff.
     // --- (Building this source surfaced a real reader race: a continuous
-    // --- getOffset poll vs the manifest rename's sub-atomic local-FS
-    // --- window — readManifest now retries bounded, see its scaladoc.) ---
+    // --- getOffset poll could find no manifest mid-swap, because Hadoop's
+    // --- local rename-with-overwrite deletes first. Commit points are now
+    // --- replaced by one POSIX rename — see graft.cdc.MetaFile.) ---
     q("cdc61_change_feed_stream",
       """WITH r1 AS (SELECT user_id, event_id AS lsn, value, event_type,
         |    row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn

@@ -77,54 +77,13 @@ class GraftGroupCdfSource(ctx: SQLContext, rootDir: String,
 
   override val schema: StructType = GraftGroupChangeFeedSource.envelopeSchema
 
-  /** Canonical JSON of a root manifest — Offset equality is string
-    * equality, so field and table order are fixed (insertion-ordered
-    * ObjectNode, tables sorted by name).
+  /** The root as it stands. The root is replaced atomically, so once a
+    * group has committed a poll always finds one; there is nothing to
+    * retry.
     */
-  private def canonical(g: TableGroup.GroupManifest): String = {
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = om.createObjectNode()
-    node.put("lastBatchId", g.lastBatchId)
-    val tn = node.putObject("tables")
-    g.tables.toSeq.sortBy(_._1).foreach { case (t, v) => tn.put(t, v) }
-    om.writeValueAsString(node)
-  }
-
-  private def parse(json: String): TableGroup.GroupManifest = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(json)
-    val tables = scala.collection.mutable.Map.empty[String, Long]
-    val it = root.get("tables").properties().iterator()
-    while (it.hasNext) {
-      val e = it.next(); tables(e.getKey) = e.getValue.asLong()
-    }
-    TableGroup.GroupManifest(root.get("lastBatchId").asLong(), tables.toMap)
-  }
-
-  /** Root polling must tolerate the swap window: on checksummed local
-    * filesystems the writer's rename-with-overwrite can expose a brief
-    * absent-file moment (destination delete + rename as two steps). Once a
-    * root HAS been observed, a None re-read is that window, not a missing
-    * group — retry, then serve the last observed root (the next poll picks
-    * up the new one; offsets only ever advance).
-    */
-  @volatile private var lastSeen: Option[TableGroup.GroupManifest] = None
-
-  private def currentRoot: TableGroup.GroupManifest = {
-    var attempt = 0
-    while (true) {
-      TableGroup.readRoot(spark, rootDir) match {
-        case Some(g) => lastSeen = Some(g); return g
-        case None => lastSeen match {
-          case Some(prev) =>
-            if (attempt >= 5) return prev
-            attempt += 1; Thread.sleep(50L * attempt)
-          case None => throw new IllegalArgumentException(
-            s"no group commit at $rootDir")
-        }
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  private def currentRoot: TableGroup.GroupManifest =
+    TableGroup.readRoot(spark, rootDir).getOrElse(
+      throw new IllegalArgumentException(s"no group commit at $rootDir"))
 
   /** No backfill: the feed begins at the root commit current at query
     * start (same stance as graft-cdf — restarted instances re-derive from
@@ -134,15 +93,14 @@ class GraftGroupCdfSource(ctx: SQLContext, rootDir: String,
     * read as an offset regression against batch 0's logged end offset.
     */
   private val startRoot: TableGroup.GroupManifest =
-    parse(StartOffsetLog.resolve(spark, metadataPath, canonical(currentRoot)))
+    TableGroup.GroupManifest.parse(
+      StartOffsetLog.resolve(spark, metadataPath, currentRoot.json))
 
-  private def manifestOf(o: Offset): TableGroup.GroupManifest = o match {
-    case s: SerializedOffset => parse(s.json)
-    case other => parse(other.json)
-  }
+  private def manifestOf(o: Offset): TableGroup.GroupManifest =
+    TableGroup.GroupManifest.parse(o.json)
 
   override def getOffset: Option[Offset] =
-    Some(SerializedOffset(canonical(currentRoot)))
+    Some(SerializedOffset(currentRoot.json))
 
   override def getBatch(start: Option[Offset], end: Offset): DataFrame = {
     val from = start.map(manifestOf).getOrElse(startRoot)

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import graft.cdc.MetaFile
 
 /** Creation-time start offset of a no-backfill streaming source, persisted
   * under the stream's own metadata dir (the `metadataPath` Spark hands
@@ -21,34 +22,21 @@ private[sources] object StartOffsetLog {
   /** Return the persisted start offset, or persist `compute` on first
     * creation. Empty `metadataPath` (direct construction in tests/tools)
     * skips persistence and just computes. Single-writer by construction
-    * (the engine creates one source per query); the write is
-    * temp-file + rename so a crash mid-write can never leave a torn
-    * offset — an empty/absent file re-computes.
+    * (the engine creates one source per query). The write is an atomic
+    * replace ([[MetaFile.replace]]), so a crash mid-write never leaves a
+    * torn offset, and a replace over an empty leftover never opens a
+    * window with no file — a restart inside one would silently recompute
+    * the start as "now", the exact regression this class exists to
+    * prevent. An empty or absent file re-computes.
     */
   def resolve(spark: SparkSession, metadataPath: String,
       compute: => String): String = {
     if (metadataPath == null || metadataPath.isEmpty) return compute
     val p = new Path(metadataPath, "graft-start-offset")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      if (s.nonEmpty) return s
+    MetaFile.read(spark, p).filter(_.nonEmpty).getOrElse {
+      val v = compute
+      MetaFile.replace(spark, p, v)
+      v
     }
-    val v = compute
-    val tmp = new Path(metadataPath, ".graft-start-offset.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.getBytes("UTF-8")) finally out.close()
-    // FileContext.rename(OVERWRITE): one atomic replace, even over the
-    // empty/torn leftover that the recompute path can leave behind. The
-    // previous delete-then-rename opened a crash window with NO destination
-    // file — a restart inside it would silently recompute the start as
-    // "now", the exact regression this class exists to prevent. rename
-    // throws (never returns an ignorable boolean), so failure stays loud.
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      p.toUri, spark.sparkContext.hadoopConfiguration)
-    fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    v
   }
 }

@@ -208,14 +208,13 @@ class TableGroupSpec extends AnyFunSuite {
   }
 
   test("race soak: concurrent root polling across 100+ rapid commits — no checksum escapes, offsets monotonic") {
-    // The two local-FS swap races (new-bytes-under-old-crc, brief
-    // destination-absent window) were found by inspection and fixed with
-    // bounded retry + last-seen fallback (TableGroup.readRoot,
-    // GraftGroupCdfSource.currentRoot). This pins them under stress:
-    // readers hammer the root from multiple threads through M rapid
-    // commits; any ChecksumException / transient-absent escape fails the
-    // thread, and every thread's observed (lastBatchId, member versions)
-    // sequence must be non-decreasing and reach the final commit.
+    // The root is replaced by one atomic rename (MetaFile), so a reader
+    // racing a swap sees the old root or the new one: never a gap, never
+    // a checksum error. This pins that under stress: readers hammer the
+    // root from multiple threads through M rapid commits; any exception or
+    // None after the first commit fails the thread, and every thread's
+    // observed (lastBatchId, member versions) sequence must be
+    // non-decreasing and reach the final commit.
     withRetain(2) {
       val root = tmp()
       def one(id: Long): Unit = {
@@ -237,24 +236,21 @@ class TableGroupSpec extends AnyFunSuite {
           var lastB = -1L
           var lastV = -1L
           while (!stop.get()) {
-            // raw readRoot may report None mid-swap (the documented
-            // absent-window contract) — a poller keeps its last-seen root,
-            // exactly the GraftGroupCdfSource stance; getOffset does this
-            // internally and must never surface a gap
-            val obs =
+            val (b, v) =
               if (viaSource) {
                 val json = src.getOffset.get.json
-                Some((batchIdRe.findFirstMatchIn(json).get.group(1).toLong,
+                (batchIdRe.findFirstMatchIn(json).get.group(1).toLong,
                   """"t":(\d+)""".r.findFirstMatchIn(json)
-                    .map(_.group(1).toLong).getOrElse(-1L)))
-              } else TableGroup.readRoot(spark, root)
-                .map(g => (g.lastBatchId, g.tables.getOrElse("t", -1L)))
-            obs.foreach { case (b, v) =>
-              assert(b >= lastB, s"lastBatchId regressed: $lastB -> $b")
-              assert(v >= lastV, s"member version regressed: $lastV -> $v")
-              lastB = b; lastV = v
-              maxSeen.getAndUpdate(m => math.max(m, b))
-            }
+                    .map(_.group(1).toLong).getOrElse(-1L))
+              } else {
+                val g = TableGroup.readRoot(spark, root).getOrElse(
+                  fail("raw readRoot returned None after the first commit"))
+                (g.lastBatchId, g.tables.getOrElse("t", -1L))
+              }
+            assert(b >= lastB, s"lastBatchId regressed: $lastB -> $b")
+            assert(v >= lastV, s"member version regressed: $lastV -> $v")
+            lastB = b; lastV = v
+            maxSeen.getAndUpdate(m => math.max(m, b))
             polls.incrementAndGet()
           }
           finals.add(lastB)
