@@ -1,22 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints ONE JSON line (driver contract).
   *
   * Local-bench-specific tuning, documented for the 100 TB reading:
-  *   - maxPartitionBytes lowered to 2 MiB: the sf test tables are single
-  *     parquet files (lineitem sf0.1 ≈ 10 MiB); the 128 MiB default would
-  *     scan them on ONE core. On a real cluster data arrives in many files
-  *     and the default is right.
+  *   - file splits sized for single-file sf tables
+  *     ([[MainSession.BenchTuning]]);
   *   - a warm-up action runs first so JVM/codegen/FileSystem init isn't
   *     billed to whichever query happens to run first.
+  *
+  * Each gate's Spark jobs, stages, tasks, shuffle bytes, job-busy seconds
+  * and driver gap ([[GateCounters]]) land in BENCH_DETAIL.json's
+  * `_counters` block.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = MainSession.cpus("4")
     // soak harness knob: at 1000× data, shuffle partitions pinned to the
     // core count mean ~2 GB reduce partitions in one shared local JVM —
     // the 8g heap OOMs on pressure a real cluster never sees (partitions
@@ -31,19 +31,10 @@ object Bench {
     val extraConf = sys.env.getOrElse("SPARK_GRAFT_CONF", "")
       .split(";").map(_.trim).filter(_.contains("="))
       .map { kv => val i = kv.indexOf('='); (kv.take(i), kv.drop(i + 1)) }
-    val spark0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        new java.io.File(sys.props("java.io.tmpdir"), "graft-warehouse").getPath)
-      .config("spark.sql.files.maxPartitionBytes", (2 * 1024 * 1024).toString)
-      .config("spark.sql.files.openCostInBytes", (256 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-    val spark = extraConf.foldLeft(spark0) { case (b, (k, v)) =>
-      b.config(k, v) }.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession(cpus, conf = MainSession.Warehouse ++
+      MainSession.BenchTuning ++
+      Seq("spark.sql.shuffle.partitions" -> shuffle) ++ extraConf)
+    val counters = new GateCounters(spark.sparkContext)
 
     // BENCH-TAIL LINT: count the warnings that are 100×-scale smells —
     // a single-partition window (WindowExec) or a self-derived trivially-
@@ -88,24 +79,17 @@ object Bench {
       else SparkEntry.queries.filter { case (n, _) => args.exists(n.startsWith) }
     // a failed query reports duration -1 (a silently-tiny duration would make
     // a REGRESSION look like a speedup in the round-over-round comparison)
-    // Per-gate phase breakdown (BenchPhase snapshot-diff): a future bench
-    // outlier on a one-time-build gate shows WHICH phase (train/save/load)
-    // absorbed the time instead of earning a filtered re-run.
-    val gatePhases = scala.collection.mutable.LinkedHashMap
-      .empty[String, Map[String, Double]]
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val ph0 = BenchPhase.snapshot()
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).count()
-        val d = BenchPhase.snapshot().map { case (k, v) =>
-          k -> (v - ph0.getOrElse(k, 0.0)) }.filter(_._2 > 0.0005)
-        if (d.nonEmpty) gatePhases(name) = d
-        name -> (System.nanoTime() - t0) / 1e9
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          name -> -1.0
+      counters.gate(name) {
+        val t0 = System.nanoTime()
+        try {
+          fn(spark, sfDir).count()
+          name -> (System.nanoTime() - t0) / 1e9
+        } catch {
+          case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            name -> -1.0
+        }
       }
     }
     // CDC throughput micro-bench (BASELINE.md): envelopes/s through
@@ -183,23 +167,25 @@ object Bench {
       s""""n_failed":$nFailed,"families":$families,"slowest":$slowest,""" +
       s""""cdc_events_per_sec":${cdcEps.toLong},"window":"$window",""" +
       s""""lint_warns":${lintWarns.get},"sf":"$sfDir"}"""
+    org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
+    val countersJson = (
+      s"""    "_unattributed": {"jobs": ${counters.unattributed}}""" +:
+      counters.counts.map { case (g, c) =>
+        s"""    "$g": {"jobs": ${c.jobs}, "stages": ${c.stages}, """ +
+        s""""tasks": ${c.tasks}, "shuffle_bytes": ${c.shuffleBytes}, """ +
+        s""""job_busy_s": ${fmt(c.jobBusySec)}, """ +
+        s""""driver_gap_s": ${fmt(c.driverGapSec)}}"""
+      }).mkString("  \"_counters\": {\n", ",\n", "\n  },\n")
     // full per-query detail — written BEFORE the stdout length guard below,
     // so an oversized summary can never discard the run's per-query record;
     // path resolves against the launch directory (overridable) rather than
     // a hardcoded checkout location
-    val phasesJson =
-      if (gatePhases.isEmpty) ""
-      else gatePhases.map { case (g, m) =>
-        "    \"" + g + "\": {" + m.toSeq.sortBy(_._1)
-          .map { case (p, v) => "\"" + p + "\": " + fmt(v) }
-          .mkString(", ") + "}"
-      }.mkString("  \"_phases\": {\n", ",\n", "\n  },\n")
     val detail = results.map { case (k, v) => "  \"" + k + "\": " + fmt(v) }
       .mkString(
         s"""{\n  "_total_sec": ${fmt(total)},\n  "_n_queries": ${results.size},\n""" +
         s"""  "_cdc_events_per_sec": ${cdcEps.toLong},\n  "_window": "$window",\n""" +
         s"""  "_sf": "$sfDir",\n""" +
-        phasesJson,
+        countersJson,
         ",\n", "\n}\n")
     try {
       // a FILTERED run (prefix args) writes a side file — it must never

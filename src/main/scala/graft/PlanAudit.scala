@@ -2,25 +2,69 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Formatted-plan dump for named queries (PLANS.md evidence):
-  * `runMain graft.PlanAudit <sfDir> <query...>`.
+/** Plan evidence for PLANS.md, two modes:
+  *   - `runMain graft.PlanAudit <sfDir> <query...>` dumps
+  *     `explain("formatted")` for each named query; `--merge-write` in
+  *     place of a query dumps the merge write's executed plan.
+  *   - `runMain graft.PlanAudit --census <prefix>...` prints one line of
+  *     plan-shape counters per gate whose name starts with a prefix (all
+  *     gates when none is given). Env contract as Bench
+  *     (SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS), and Bench's split tuning.
   */
 object PlanAudit {
-  def main(args: Array[String]): Unit = {
-    val sfDir = args.head
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    for (name <- args.tail) {
-      if (name == "--merge-write") dumpMergeWritePlan(spark, sfDir)
-      else if (name == "--multiset-eq") dumpMultisetEqPlans(spark, sfDir)
-      else {
-        println(s"\n===== $name =====")
-        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+  def main(args: Array[String]): Unit =
+    if (args.headOption.contains("--census")) census(args.tail.toSeq)
+    else {
+      val sfDir = args.head
+      val spark = MainSession("4", "ERROR")
+      for (name <- args.tail) {
+        if (name == "--merge-write") dumpMergeWritePlan(spark, sfDir)
+        else {
+          println(s"\n===== $name =====")
+          SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+        }
+      }
+      spark.stop()
+    }
+
+  // census counter → the plan-string patterns it sums
+  private val censusShapes = Seq(
+    "exch" -> Seq("Exchange hashpartitioning", "Exchange rangepartitioning",
+      "Exchange RoundRobinPartitioning"),
+    "single" -> Seq("Exchange SinglePartition"),
+    "smj" -> Seq("SortMergeJoin"),
+    "bhj" -> Seq("BroadcastHashJoin"),
+    "shj" -> Seq("ShuffledHashJoin"),
+    "bnl" -> Seq("BroadcastNestedLoopJoin"),
+    "cart" -> Seq("CartesianProduct"),
+    "scans" -> Seq("FileScan parquet", "Scan parquet"),
+    "cache" -> Seq("InMemoryTableScan"))
+
+  /** Plan-shape census over the declared surface: for each selected gate,
+    * build its DataFrame and count, in the executed plan's pre-execution
+    * form, exchanges, join strategies, cartesian products, single-partition
+    * exchanges, scans and cache reads. Wall-clock on a small VM swings
+    * ±20 %; these counters do not. Building a gate's DataFrame RUNS its
+    * eager setup (merges, index builds), so a sweep costs roughly a bench
+    * of the selected families.
+    */
+  private def census(prefixes: Seq[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = MainSession(MainSession.cpus("4"), "ERROR",
+      MainSession.Warehouse ++ MainSession.BenchTuning)
+    val selected = SparkEntry.queries
+      .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
+    selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      try {
+        val p = fn(spark, sfDir).queryExecution.executedPlan.toString
+        val counts = censusShapes.map { case (key, pats) =>
+          s"$key=${pats.map(_.r.findAllIn(p).size).sum}" }
+        println(s"[planstats] $name ${counts.mkString(" ")} " +
+          s"nodes=${p.linesIterator.size}")
+      } catch {
+        case e: Throwable =>
+          println(s"[planstats] $name ERROR ${e.getClass.getSimpleName}: " +
+            s"${Option(e.getMessage).getOrElse("").take(120)}")
       }
     }
     spark.stop()
@@ -56,37 +100,10 @@ object PlanAudit {
     plans.clear() // keep only the second merge: existing ∪ incoming
     graft.cdc.MaterializedTable.merge(spark, dir,
       env.filter(col("lsn") >= mx / 2), Seq("key"), Seq("lsn", "seq"))
-    Thread.sleep(2000) // QueryExecutionListener fires async on the bus
+    // QueryExecutionListener fires async on the bus
+    org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
     spark.listenerManager.unregister(listener)
     println(s"\n===== merge write (second merge: existing state ∪ incoming) =====")
     plans.forEach(p => println(p))
-  }
-
-  /** The protocol drills' multiset-equality check, before/after shapes on a
-    * representative pair (two independent latest-state restatements of the
-    * events changelog): BEFORE = the two-directional exceptAll (each
-    * direction its own job), AFTER = Qutil.multisetEq's one signed-union
-    * grouped count.
-    */
-  private def dumpMultisetEqPlans(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.functions._
-    val env = graft.cdc.ChangelogGen.fromEvents(spark, sfDir).toDF()
-      .select(col("op"), col("key"), col("lsn"), col("seq"),
-        get_json_object(col("after"), "$.value").cast("double").as("value"))
-    val a = graft.cdc.LatestState.batch(env, Seq("key"), Seq("lsn", "seq"))
-      .select(col("key"), col("lsn"), col("value"))
-    val b = graft.cdc.LatestState.batch(env, Seq("key"), Seq("lsn", "seq"),
-        keepDeleted = true)
-      .filter(col("op") =!= graft.cdc.Op.Delete)
-      .select(col("key"), col("lsn"), col("value"))
-    println("\n===== multiset equality BEFORE: a.exceptAll(b) (x2 directions, one job each) =====")
-    a.exceptAll(b).explain("formatted")
-    println("\n===== multiset equality AFTER: one signed-union grouped count (Qutil.multisetEq) =====")
-    a.withColumn("_ms", lit(1L))
-      .unionByName(b.withColumn("_ms", lit(-1L)))
-      .groupBy(col("key"), col("lsn"), col("value"))
-      .agg(sum(col("_ms")).as("_net"))
-      .filter(col("_net") =!= 0L)
-      .explain("formatted")
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{IvfIndex, PqIndex, Similarity}
 
@@ -38,15 +37,8 @@ import graft.operators.{IvfIndex, PqIndex, Similarity}
 object RecallSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val k = args.headOption.map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession(MainSession.cpus("8"))
     try {
       val clustered = args.length >= 2 && args(1) == "clustered"
       val baseEmb =

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-soak corpus synthesizer (bench tooling, not a query operator):
@@ -182,14 +182,7 @@ object SoakSynth {
     val wanted = if (args.length > 3) args(3).split(",").map(_.trim).toSet
       else Tables.all.toSet
     if (args.length > 4) permFrom = args(4).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = MainSession(MainSession.cpus("8"))
     for (t <- Tables.all if wanted.contains(t)) {
       // byName fixes the events ts encoding once; the copy is written as
       // plain timestamp[us], which every loader handles. localCheckpoint:

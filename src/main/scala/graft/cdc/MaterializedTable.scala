@@ -783,16 +783,13 @@ object MaterializedTable {
       !batchId.exists(id => head.exists(_.lastBatchId >= id))
     }
     if (!admits(readManifest(spark, dir))) return 0
-    graft.BenchPhase.count("mt_merge")
     // persist: the updates plan feeds both the touched-bucket collect and the
     // combine/write — without this it would execute twice
     val incoming = updates.withColumn("_bucket", bucketCol(bucketKeyCols, numBuckets))
       .persist()
     try {
-      val keyed = graft.BenchPhase.time("mt_touched") {
-        incoming.select("_bucket").distinct()
-          .collect().map(_.getInt(0)).sorted.toSeq
-      }
+      val keyed = incoming.select("_bucket").distinct()
+        .collect().map(_.getInt(0)).sorted.toSeq
       // The snapshot this commit builds on is read only now, after the
       // touched-bucket collect, which does not need it. Under a hot
       // opposing writer (a maintenance compaction loop) the read→claim
@@ -873,8 +870,7 @@ object MaterializedTable {
       // (staging deleted)
       writeAndCommit(spark, dir, newV, out,
         touched.flatMap(b => oldBuckets.get(b).map(b -> _))) {
-        val writtenStats = graft.BenchPhase.time("mt_stats") {
-          bucketStats(out, statsCols) }
+        val writtenStats = bucketStats(out, statsCols)
         out.unpersist()
         val newBuckets =
           (oldBuckets -- touched) ++ writtenStats.keySet.map(_ -> newV)
@@ -915,14 +911,11 @@ object MaterializedTable {
       out: DataFrame, superseded: Iterable[(Int, Long)])(
       manifest: => Manifest): Unit = {
     val stage = stagePath(dir, newV)
-    graft.BenchPhase.time("mt_write") {
-      out.write.mode("append")
-        .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy("_bucket").parquet(stage.toString)
-    }
-    val m = manifest
-    graft.BenchPhase.time("mt_commit") { commitStaged(spark, dir, stage, m) }
+    out.write.mode("append")
+      .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .partitionBy("_bucket").parquet(stage.toString)
+    commitStaged(spark, dir, stage, manifest)
     if (retainVersions(spark) <= 0) try {
       val (fs, _) = fsOf(spark, dir)
       for ((b, v) <- superseded) {
@@ -1062,8 +1055,8 @@ object MaterializedTable {
     * superseded bucket files — concurrent long scans (and [[readVersion]]
     * time travel) need `spark.graft.materialized.retainVersions > 0`, which
     * defers all GC to [[vacuum]]'s retention horizon.
-    */
-  /** @param sortCols CLUSTERED compaction: rewrite each bucket's rows
+    *
+    * @param sortCols CLUSTERED compaction: rewrite each bucket's rows
     *   sorted by these columns (lexicographic; for 2-D range workloads
     *   sort by a materialized [[graft.operators.Layout.morton2]] key
     *   instead). Hash bucketing scatters payload ranges across buckets —
@@ -1079,14 +1072,10 @@ object MaterializedTable {
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket must be >= 1, got $maxFilesPerBucket")
     val m = readManifest(spark, dir).getOrElse(return 0)
-    val (fs, _) = fsOf(spark, dir)
     val oversized =
       if (sortCols.nonEmpty) m.buckets.keys.toSeq.sorted
-      else m.buckets.toSeq.filter { case (b, v) =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/v$v/_bucket=$b")
-        fs.exists(p) && fs.listStatus(p)
-          .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket
-      }.map(_._1).sorted
+      else parquetFilesPerBucket(spark, dir, m)
+        .filter(_._2 > maxFilesPerBucket).keys.toSeq.sorted
     if (oversized.isEmpty) return 0
     val repartitioned = readBuckets(spark, dir, m, oversized)
       .repartition(oversized.size, col("_bucket"))
@@ -1532,13 +1521,15 @@ object MaterializedTable {
   /** LAYOUT EVOLUTION: rewrite the whole table under a new bucket count —
     * the explicit full-rewrite the merge-time numBuckets guard points at
     * (a table outgrowing its bucket count is the one layout decision hash
-    * bucketing cannot absorb incrementally: every key re-hashes). One job:
-    * read the live state (path-pruned), re-bucket, write a complete new
-    * version, swap the manifest — the same crash discipline as a merge (a
-    * death before the swap leaves the old layout fully live). The batch
+    * bucketing cannot absorb incrementally: every key re-hashes). Read the
+    * live state (path-pruned), re-bucket, write a complete new version,
+    * swap the manifest — the same crash discipline as a merge (a death
+    * before the swap leaves the old layout fully live). The batch
     * watermark is PRESERVED: replays of already-folded batches stay
     * no-ops across the layout change. Stats are recomputed for the new
-    * buckets (same grouped pass a merge pays). Returns the new version.
+    * buckets by the grouped pass a merge pays, over the cache the write
+    * fills: its Spark jobs are the write, then the stats aggregation (two
+    * jobs under AQE). Returns the new version.
     *
     * Cost is honest: O(table) read + shuffle + write — schedule it like
     * any OPTIMIZE. Readers holding the old manifest keep the old files
@@ -1551,12 +1542,15 @@ object MaterializedTable {
     require(m.bucketCols.nonEmpty,
       s"manifest at $dir predates layout recording — re-merge once")
     val state = readState(spark, dir).drop("_bucket")
+    // persisted, not checkpointed: the write fills the cache and the stats
+    // pass reads it, with no separate materialization job (as in a merge)
     val out = state
       .withColumn("_bucket", bucketCol(m.bucketCols, newNumBuckets))
-      .localCheckpoint() // feeds the write AND the stats pass
+      .persist()
     val newV = m.version + 1
     writeAndCommit(spark, dir, newV, out, m.buckets) {
       val writtenStats = bucketStats(out, statsCols)
+      out.unpersist()
       Manifest(newV, m.lastBatchId, out.schema.json,
         writtenStats.keys.map(_ -> newV).toMap,
         newNumBuckets, m.bucketCols, writtenStats)
@@ -1589,8 +1583,13 @@ object MaterializedTable {
     * used to walk `v4/_bucket=*` with hardcoded names). O(numBuckets)
     * driver-side listStatus, metadata-only.
     */
-  def filesPerBucket(spark: SparkSession, dir: String): Map[Int, Int] = {
-    val m = readManifest(spark, dir).getOrElse(return Map.empty)
+  def filesPerBucket(spark: SparkSession, dir: String): Map[Int, Int] =
+    readManifest(spark, dir)
+      .map(parquetFilesPerBucket(spark, dir, _)).getOrElse(Map.empty)
+
+  /** Parquet files in each of `m`'s live bucket dirs (0 for a missing dir). */
+  private def parquetFilesPerBucket(spark: SparkSession, dir: String,
+      m: Manifest): Map[Int, Int] = {
     val (fs, _) = fsOf(spark, dir)
     m.buckets.map { case (b, v) =>
       val p = new org.apache.hadoop.fs.Path(s"$dir/v$v/_bucket=$b")

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.BenchPhase
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,13 +97,11 @@ object PqIndex {
       import spark.implicits._
       val key = s"pq:$key0:$idCol:$vecCol:m=$m:k=$k:i=$iters:t=$maxTrainRows"
       val rows = pqMemo.computeIfAbsent(key, _ => {
-        BenchPhase.count("pq_train_memo_miss")
         trainImpl(trainSample(corpus, idCol, maxTrainRows), idCol, vecCol,
           m, k, iters)
           .select(col("s"), col("cell"), col("cv"))
           .as[(Int, Int, Seq[Long])].collect()
       })
-      BenchPhase.count("pq_train_memo_call")
       spark.createDataset(rows.toSeq).toDF("s", "cell", "cv")
   }
 
@@ -115,25 +112,21 @@ object PqIndex {
       memoKey: Option[String], maxTrainRows: Long = Long.MaxValue)
       : DataFrame = memoKey match {
     case None =>
-      BenchPhase.time("pq_coarse_train")(
-        IvfIndex.trainQ(trainSample(qn, "id", maxTrainRows), nLists, iters))
+      IvfIndex.trainQ(trainSample(qn, "id", maxTrainRows), nLists, iters)
     case Some(key0) =>
       val spark = qn.sparkSession
       import spark.implicits._
       val key = s"coarse:$key0:nLists=$nLists:i=$iters:t=$maxTrainRows"
       val rows = coarseMemo.computeIfAbsent(key, _ => {
-        BenchPhase.count("pq_coarse_memo_miss")
         // the memo stores centroid ROWS in the JVM — refuse loudly for an
         // N-proportional nLists (the IvfIndex collect-guard discipline);
         // huge-nLists callers use memoKey = None, whose trainQ output
         // stays a DataFrame and routes distributed past the guard
         IvfIndex.requireCentroidsCollectable(qn.sparkSession, nLists.toLong,
           "PqIndex coarse-quantizer memo")
-        BenchPhase.time("pq_coarse_train")(
-          IvfIndex.trainQ(trainSample(qn, "id", maxTrainRows), nLists, iters))
+        IvfIndex.trainQ(trainSample(qn, "id", maxTrainRows), nLists, iters)
           .select(col("cell"), col("cv")).as[(Int, Seq[Long])].collect()
       })
-      BenchPhase.count("pq_coarse_memo_call")
       spark.createDataset(rows.toSeq).toDF("cell", "cv")
   }
 
@@ -144,7 +137,7 @@ object PqIndex {
     * one training, not m.
     */
   private def trainImpl(corpus: DataFrame, idCol: String, vecCol: String,
-      m: Int, k: Int, iters: Int): DataFrame = BenchPhase.time("pq_train") {
+      m: Int, k: Int, iters: Int): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // ALL m subspaces train through ONE fused Lloyd (r15 optimization):
@@ -266,7 +259,7 @@ object PqIndex {
       * task counts would write metadata-toxic slivers). Codebooks are
       * `m`·`k` rows — one file.
       */
-    def save(dir: String): Unit = BenchPhase.time("pq_save") {
+    def save(dir: String): Unit = {
       codebooks.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
       codes.repartition(col("id"))
         .write.mode("overwrite").parquet(s"$dir/codes")
@@ -290,13 +283,12 @@ object PqIndex {
     * `load(save(build(…)))` returns the same rows as over the in-memory
     * index (pinned in spec).
     */
-  def load(spark: org.apache.spark.sql.SparkSession, dir: String): Index =
-    BenchPhase.time("pq_load") {
-      val books = spark.read.parquet(s"$dir/codebooks")
-        .select(col("s").cast("int"), col("cell").cast("int"), col("cv"))
-      val codes = spark.read.parquet(s"$dir/codes")
-      Index(books, codes, books.agg(max(col("s"))).head().getInt(0) + 1)
-    }
+  def load(spark: org.apache.spark.sql.SparkSession, dir: String): Index = {
+    val books = spark.read.parquet(s"$dir/codebooks")
+      .select(col("s").cast("int"), col("cell").cast("int"), col("cv"))
+    val codes = spark.read.parquet(s"$dir/codes")
+    Index(books, codes, books.agg(max(col("s"))).head().getInt(0) + 1)
+  }
 
   /** Compress NEW vectors against FROZEN codebooks and append — the PQ twin
     * of [[IvfIndex.append]]: the m Lloyd trainings never re-run; an arriving
@@ -439,7 +431,7 @@ object PqIndex {
       * The repartition-by-cell aligns write tasks with partition dirs —
       * without it every task writes a sliver of every cell.
       */
-    def save(dir: String): Unit = BenchPhase.time("ivfpq_save") {
+    def save(dir: String): Unit = {
       coarse.coalesce(1).write.mode("overwrite").parquet(s"$dir/coarse")
       codebooks.coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
       codes.repartition(col("cell"))
@@ -479,15 +471,14 @@ object PqIndex {
     * search over `loadIvf(save(buildIvf(…)))` reproduces the inline
     * [[searchIvf]] results bit-for-bit (spec + vec15 gate).
     */
-  def loadIvf(spark: org.apache.spark.sql.SparkSession, dir: String): IvfPq =
-    BenchPhase.time("ivfpq_load") {
-      val books = spark.read.parquet(s"$dir/codebooks")
-        .select(col("s").cast("int"), col("cell").cast("int"), col("cv"))
-      // partition-column inference can widen `cell`; pin the written schema
-      val codes = spark.read.parquet(s"$dir/codes")
-        .select(col("neighbor_id"), col("cell").cast("int"), col("codes"))
-      IvfPq(spark.read.parquet(s"$dir/coarse"), books, codes,
-        books.agg(max(col("s"))).head().getInt(0) + 1)
+  def loadIvf(spark: org.apache.spark.sql.SparkSession, dir: String): IvfPq = {
+    val books = spark.read.parquet(s"$dir/codebooks")
+      .select(col("s").cast("int"), col("cell").cast("int"), col("cv"))
+    // partition-column inference can widen `cell`; pin the written schema
+    val codes = spark.read.parquet(s"$dir/codes")
+      .select(col("neighbor_id"), col("cell").cast("int"), col("codes"))
+    IvfPq(spark.read.parquet(s"$dir/coarse"), books, codes,
+      books.agg(max(col("s"))).head().getInt(0) + 1)
   }
 
   /** [[IvfIndex.appendSaved]]'s IVF-PQ twin: encode a new batch against the

@@ -12,6 +12,14 @@ object GraftShims {
   def sessionState(s: SparkSession): internal.SessionState =
     s.asInstanceOf[classic.SparkSession].sessionState
 
+  /** Block until the listener bus is empty (`waitUntilEmpty` is
+    * spark-private). After it returns, every listener has seen every event
+    * posted before the call, so listener-fed state (including
+    * `statusTracker`) can be read without polling.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** The VALUE expression under a sort column (`col("v").desc` → `v`);
     * a non-sort column passes through — for callers that need to
     * aggregate over an ordering's key expressions.

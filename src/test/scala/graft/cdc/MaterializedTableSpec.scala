@@ -1,9 +1,8 @@
 package graft.cdc
 
 import graft.SparkTestSession
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -511,6 +510,43 @@ class MaterializedTableSpec extends AnyFunSuite {
     assert(markers == 0L, "no write may leave a _SUCCESS marker")
   }
 
+  test("rebucket's write fills the cache its stats pass reads: no materialization job") {
+    val s2 = spark.newSession()
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_rebucket").toString + "/t"
+    MaterializedTable.merge(s2, dir,
+      (1 to 32).map(i => ev("insert", s"k$i", i, s"v$i")).toDF(),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 4, statsCols = Seq("lsn"))
+    def state = MaterializedTable.read(s2, dir).select("key", "after")
+      .as[(String, String)].collect().toSet
+    val before = state
+
+    val sc = s2.sparkContext
+    val marker = "mt-rebucket-jobs"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("graft.test.marker") == marker)
+          sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("graft.test.marker", marker)
+      try MaterializedTable.rebucket(s2, dir, 8, statsCols = Seq("lsn"))
+      finally sc.setLocalProperty("graft.test.marker", null)
+      GraftShims.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    // the write, then the stats pass's grouped aggregation (two jobs under
+    // AQE); an eager localCheckpoint used to add a fourth, before the write
+    assert(sites.size == 3, s"rebucket ran ${sites.size} jobs: $sites")
+
+    val m = MaterializedTable.readManifest(s2, dir).get
+    assert(m.numBuckets == 8)
+    assert(m.stats.values.map(_.rows).sum == 32L, s"stats cover every row: ${m.stats}")
+    assert(state == before && before.size == 32)
+  }
+
   /** Each key's bucket under `numBuckets` (the layout's own hash), in one job. */
   private def bucketsOf(s: SparkSession, keys: Seq[String],
       numBuckets: Int): Map[String, Int] = {
@@ -621,7 +657,7 @@ class MaterializedTableSpec extends AnyFunSuite {
       started.set(0)
       sc.setLocalProperty("graft.test.marker", marker)
       try f finally sc.setLocalProperty("graft.test.marker", null)
-      ListenerBusDrain(sc)
+      GraftShims.drainListenerBus(sc)
       started.get
     }
     sc.addSparkListener(listener)

@@ -1,8 +1,8 @@
 package graft.cdc
 
 import graft.SparkTestSession
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 
 /** [[Parallel]]: the one helper that overlaps independent Spark actions.
@@ -29,7 +29,7 @@ class ParallelSpec extends AnyFunSuite {
     sc.addSparkListener(listener)
     try {
       val a = f
-      ListenerBusDrain(sc)
+      GraftShims.drainListenerBus(sc)
       import scala.jdk.CollectionConverters._
       (a, seen.asScala.toMap)
     } finally sc.removeSparkListener(listener)
@@ -110,7 +110,7 @@ class ParallelSpec extends AnyFunSuite {
       assert(e.getMessage == "boom")
     } finally sc.removeSparkListener(listener)
     val secs = (System.nanoTime() - t0) / 1e9
-    ListenerBusDrain(sc)
+    GraftShims.drainListenerBus(sc)
     assert(sc.statusTracker.getActiveJobIds().isEmpty)
     assert(secs < 15, s"the sibling job was cancelled, not awaited: $secs s")
   }

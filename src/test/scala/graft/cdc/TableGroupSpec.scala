@@ -1,8 +1,7 @@
 package graft.cdc
 
 import graft.SparkTestSession
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftShims}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Atomic multi-table commit (TableGroup): cross-table snapshot isolation,
@@ -192,12 +191,12 @@ class TableGroupSpec extends AnyFunSuite {
         writer.join(60000L)
         assert(!writer.isAlive && thrown.get.isInstanceOf[InterruptedException],
           s"the commit should rethrow the interrupt: ${thrown.get}")
-        ListenerBusDrain(sc)
+        GraftShims.drainListenerBus(sc)
         assert(sc.statusTracker.getActiveJobIds().isEmpty,
           "no merge job outlives the interrupted commit")
         val seen = starts.get
         Thread.sleep(1000L)
-        ListenerBusDrain(sc)
+        GraftShims.drainListenerBus(sc)
         assert(starts.get == seen, "no merge job starts after the commit threw")
       } finally sc.removeSparkListener(listener)
       assert(TableGroup.readRoot(spark, root).isEmpty, "the root never swapped")
