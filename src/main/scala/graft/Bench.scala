@@ -175,18 +175,22 @@ object Bench {
         s""""tasks": ${c.tasks}, "shuffle_bytes": ${c.shuffleBytes}, """ +
         s""""job_busy_s": ${fmt(c.jobBusySec)}, """ +
         s""""driver_gap_s": ${fmt(c.driverGapSec)}}"""
-      }).mkString("  \"_counters\": {\n", ",\n", "\n  },\n")
+      }).mkString("  \"_counters\": {\n", ",\n", "\n  }")
     // full per-query detail — written BEFORE the stdout length guard below,
     // so an oversized summary can never discard the run's per-query record;
     // path resolves against the launch directory (overridable) rather than
-    // a hardcoded checkout location
-    val detail = results.map { case (k, v) => "  \"" + k + "\": " + fmt(v) }
-      .mkString(
-        s"""{\n  "_total_sec": ${fmt(total)},\n  "_n_queries": ${results.size},\n""" +
-        s"""  "_cdc_events_per_sec": ${cdcEps.toLong},\n  "_window": "$window",\n""" +
-        s"""  "_sf": "$sfDir",\n""" +
-        countersJson,
-        ",\n", "\n}\n")
+    // a hardcoded checkout location. Header, counters and per-gate rows are
+    // one comma-joined list, so a filter that selects no gate still writes
+    // valid JSON.
+    val detail = (Seq(
+      s"""  "_total_sec": ${fmt(total)}""",
+      s"""  "_n_queries": ${results.size}""",
+      s"""  "_cdc_events_per_sec": ${cdcEps.toLong}""",
+      s"""  "_window": "$window"""",
+      s"""  "_sf": "$sfDir"""",
+      countersJson) ++
+      results.map { case (k, v) => "  \"" + k + "\": " + fmt(v) })
+      .mkString("{\n", ",\n", "\n}\n")
     try {
       // a FILTERED run (prefix args) writes a side file — it must never
       // clobber the full-surface record the driver and the soak math read

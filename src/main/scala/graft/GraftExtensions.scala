@@ -44,7 +44,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       })
 
   override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    // a Once batch after operator optimization, as extraOptimizations runs
+    // it: inside that batch the rule never reached a fixed point
+    e.injectPreCBORule(_ => graft.plans.RangeJoinRewrite)
     e.injectOptimizerRule(_ => graft.plans.ApproxDistinctRewrite)
     e.injectOptimizerRule(_ => graft.plans.JoinEliminationRewrite)
     e.injectOptimizerRule(_ => graft.plans.MetadataCountRewrite)

@@ -697,7 +697,7 @@ object MaterializedTable {
     * groups then share one schema and union by position. This relies on the
     * [[Manifest]] schema invariant.
     */
-  private def readBuckets(spark: SparkSession, dir: String, m: Manifest,
+  private[cdc] def readBuckets(spark: SparkSession, dir: String, m: Manifest,
       wanted: Seq[Int]): DataFrame = {
     val live = m.buckets.filter { case (b, _) => wanted.contains(b) }
     if (live.isEmpty) return emptyFromSchema(spark, m)
@@ -709,9 +709,72 @@ object MaterializedTable {
     }.reduce(_.union(_))
   }
 
+  /** The most parquet bytes [[readBucketsLocal]] decodes on the driver. One
+    * bucket of a serving table fits with room to spare (perfbench's serve
+    * and firehose buckets are at most about 0.5 and 2 MiB). It is a
+    * constant because it bounds driver memory and decode time, not a
+    * property of the table or the cluster.
+    */
+  private[cdc] val driverReadMaxBytes = 4L << 20
+
+  /** [[readBuckets]] for the serving faces ([[lookup]], [[readPruned]]).
+    * The wanted bucket directories are listed with the Hadoop FileSystem,
+    * which starts no Spark listing job. When their files total at most
+    * [[driverReadMaxBytes]], they are decoded on the driver into a local
+    * relation: the optimizer folds the caller's filters and projections
+    * into it, and collecting the result runs no Spark job. Larger reads
+    * are [[readBuckets]].
+    *
+    * The decode is the executor read's own: Spark's parquet reader function
+    * with the same nullable manifest schema, and `_bucket` appended as
+    * partition discovery types it (a nullable int). Evolution and widening
+    * therefore read exactly as in [[readBuckets]], under either parquet
+    * reader. The reader function broadcasts the Hadoop conf, so it is built
+    * once per read; the broadcast is unreferenced when the read returns,
+    * and Spark's ContextCleaner removes it after the next driver GC.
+    */
+  private[cdc] def readBucketsLocal(spark: SparkSession, dir: String,
+      m: Manifest, wanted: Seq[Int]): DataFrame = {
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val live = m.buckets.filter { case (b, _) => wanted.contains(b) }
+    if (live.isEmpty) return emptyFromSchema(spark, m)
+    val (fs, _) = fsOf(spark, dir)
+    val files = live.toSeq.sorted.flatMap { case (b, v) =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/v$v/_bucket=$b"))
+        .filter { st =>
+          val n = st.getPath.getName
+          st.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }.map(b -> _)
+    }
+    if (files.map(_._2.getLen).sum > driverReadMaxBytes)
+      return readBuckets(spark, dir, m, wanted)
+    val data = org.apache.spark.sql.GraftShims.asNullable(m.schema)
+    val part = StructType(Seq(StructField("_bucket", IntegerType)))
+    val reader = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().buildReaderWithPartitionValues(spark, data, part,
+        data, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    val schema = StructType(data ++ part)
+    val toUnsafe = org.apache.spark.sql.catalyst.expressions
+      .UnsafeProjection.create(schema)
+    val rows = files.flatMap { case (b, st) =>
+      val it = reader(PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow(b),
+        org.apache.spark.paths.SparkPath.fromPath(st.getPath), 0L, st.getLen,
+        Array.empty[String], st.getModificationTime, st.getLen))
+      // the reader reuses its row buffers: copy each row out
+      try it.map(r => toUnsafe(r).copy()).toVector
+      finally it match {
+        case c: java.io.Closeable => c.close()
+        case _ =>
+      }
+    }
+    org.apache.spark.sql.GraftShims.localDataFrame(spark, schema, rows)
+  }
+
   private def emptyFromSchema(spark: SparkSession, m: Manifest): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], m.schema)
+    org.apache.spark.sql.GraftShims.localDataFrame(spark, m.schema, Nil)
 
   /** Whether the parquet reader reads values written as `file` under the
     * type `read`: the same type up to nullability, a numeric widening the
@@ -1443,15 +1506,29 @@ object MaterializedTable {
     * predicate's recognized conjuncts (`col <op> literal` under AND) are
     * never listed; the FULL predicate then applies as a normal filter, so
     * the result is identical to `read(...).filter(predicate)` on every
-    * input — skipping removes IO, never rows.
+    * input — skipping removes IO, never rows. Kept buckets within the
+    * driver bound are decoded on the driver ([[readBucketsLocal]]), so
+    * collecting the result runs no Spark job.
     */
   def readPruned(spark: SparkSession, dir: String,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
+      predicate: org.apache.spark.sql.Column): DataFrame =
+    prunedWith(spark, dir, predicate, readBucketsLocal)
+
+  /** [[readPruned]] through the executor read alone, for a caller that
+    * turns the result into an RDD anyway: a decode on the driver would
+    * only add planning time there.
+    */
+  private[graft] def readPrunedOnExecutors(spark: SparkSession, dir: String,
+      predicate: org.apache.spark.sql.Column): DataFrame =
+    prunedWith(spark, dir, predicate, readBuckets)
+
+  private def prunedWith(spark: SparkSession, dir: String,
+      predicate: org.apache.spark.sql.Column,
+      read: (SparkSession, String, Manifest, Seq[Int]) => DataFrame)
+      : DataFrame = {
     val m = requireManifest(spark, dir)
-    val keep = matchingBuckets(spark, m, predicate)
-    val base = if (keep.isEmpty) emptyFromSchema(spark, m)
-      else readBuckets(spark, dir, m, keep)
-    base.filter(predicate).drop("_bucket")
+    read(spark, dir, m, matchingBuckets(spark, m, predicate))
+      .filter(predicate).drop("_bucket")
   }
 
   /** POINT LOOKUP: read the state of one key by touching exactly the bucket
@@ -1459,7 +1536,9 @@ object MaterializedTable {
     * `key` pairs positionally with the manifest's recorded `bucketCols`;
     * values are cast to the stored column types BEFORE hashing (murmur3 is
     * type-sensitive). Requires a manifest that records its layout (any
-    * manifest written since numBuckets/bucketCols landed).
+    * manifest written since numBuckets/bucketCols landed). A bucket within
+    * the driver bound is decoded on the driver ([[readBucketsLocal]]), so
+    * collecting the lookup runs no Spark job.
     */
   def lookup(spark: SparkSession, dir: String, key: Seq[Any]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, Literal, Murmur3Hash}
@@ -1478,8 +1557,7 @@ object MaterializedTable {
     // same murmur3 + seed as functions.hash — the layout's bucket function
     val h = new Murmur3Hash(lits).eval(null).asInstanceOf[Int]
     val b = ((h % m.numBuckets) + m.numBuckets) % m.numBuckets
-    val base = if (!m.buckets.contains(b)) emptyFromSchema(spark, m)
-      else readBuckets(spark, dir, m, Seq(b))
+    val base = readBucketsLocal(spark, dir, m, Seq(b))
     m.bucketCols.zip(lits).foldLeft(base) { case (df, (c, l)) =>
       df.filter(col(c) === org.apache.spark.sql.GraftShims.column(l))
     }.drop("_bucket")

@@ -194,7 +194,7 @@ class GraftTableRelation(ctx: SQLContext, dir: String)
     val spark = ctx.sparkSession
     val pred = filters.flatMap(pruningColumn).reduceOption(_ && _)
     val base = pred match {
-      case Some(p) => MaterializedTable.readPruned(spark, dir, p)
+      case Some(p) => MaterializedTable.readPrunedOnExecutors(spark, dir, p)
       case None => MaterializedTable.read(spark, dir)
     }
     // an empty projection (COUNT(*) pushdown shape) still needs row arity

@@ -12,6 +12,21 @@ object GraftShims {
   def sessionState(s: SparkSession): internal.SessionState =
     s.asInstanceOf[classic.SparkSession].sessionState
 
+  /** `schema` with every field nullable, nested ones included: the schema a
+    * file-source relation reports for a user-given schema.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
+  /** A DataFrame over rows already in driver memory (a `LocalRelation`).
+    * The optimizer folds filters and projections over it into new rows
+    * (`ConvertToLocalRelation`), and collecting it runs no Spark job.
+    */
+  def localDataFrame(s: SparkSession, schema: types.StructType,
+      rows: Seq[catalyst.InternalRow]): DataFrame =
+    classic.Dataset.ofRows(s.asInstanceOf[classic.SparkSession],
+      catalyst.plans.logical.LocalRelation(
+        catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
   /** Block until the listener bus is empty (`waitUntilEmpty` is
     * spark-private). After it returns, every listener has seen every event
     * posted before the call, so listener-fed state (including

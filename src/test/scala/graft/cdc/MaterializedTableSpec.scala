@@ -631,20 +631,9 @@ class MaterializedTableSpec extends AnyFunSuite {
     agree("after restore")
   }
 
-  test("building a read runs no Spark job; collecting a lookup runs one") {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.graft.materialized.retainVersions", "4")
-    import s2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mt_jobs").toString + "/t"
-    MaterializedTable.merge(s2, dir,
-      (1 to 16).map(i => ev("insert", s"k$i", i, s"v$i")).toDF(),
-      Seq("key"), Seq("lsn", "seq"), numBuckets = 4)
-    MaterializedTable.merge(s2, dir, Seq(ev("update", "k1", 100, "v1b")).toDF(),
-      Seq("key"), Seq("lsn", "seq"), numBuckets = 4)
-    val live = MaterializedTable.readManifest(s2, dir).get.buckets
-    assert(live.values.toSet.size >= 2, s"buckets span two version dirs: $live")
-
-    val sc = s2.sparkContext
+  /** Runs `f` and returns how many Spark jobs it started on this thread. */
+  private def jobsOf(s: SparkSession)(f: => Unit): Int = {
+    val sc = s.sparkContext
     val marker = "mt-read-jobs"
     val started = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -653,31 +642,170 @@ class MaterializedTableSpec extends AnyFunSuite {
             e.properties.getProperty("graft.test.marker") == marker)
           started.incrementAndGet()
     }
-    def jobsOf(f: => Unit): Int = {
-      started.set(0)
+    sc.addSparkListener(listener)
+    try {
       sc.setLocalProperty("graft.test.marker", marker)
       try f finally sc.setLocalProperty("graft.test.marker", null)
       GraftShims.drainListenerBus(sc)
       started.get
-    }
-    sc.addSparkListener(listener)
-    try {
-      val built = Map[String, () => DataFrame](
-        "lookup" -> (() => MaterializedTable.lookup(s2, dir, Seq("k1"))),
-        "readPruned" -> (() =>
-          MaterializedTable.readPruned(s2, dir, col("key") === "k2")),
-        "read" -> (() => MaterializedTable.read(s2, dir)),
-        "readVersion" -> (() => MaterializedTable.readVersion(s2, dir, 1L)),
-        "changeFeed" -> (() =>
-          MaterializedTable.changeFeed(s2, dir, 1L, 2L, Seq("key"))))
-        .map { case (face, build) => face -> jobsOf(build()) }
-      assert(built.values.forall(_ == 0), s"jobs run while building: $built")
-      var got: Array[org.apache.spark.sql.Row] = null
-      val collected = jobsOf {
-        got = MaterializedTable.lookup(s2, dir, Seq("k1")).collect() }
-      assert(collected == 1, "a lookup's collect is its only job")
-      assert(got.map(_.getAs[String]("after")).toSeq == Seq("v1b"))
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("building or collecting a lookup or pruned read runs no job") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.graft.materialized.retainVersions", "4")
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_jobs").toString + "/t"
+    MaterializedTable.merge(s2, dir,
+      (1 to 16).map(i => ev("insert", s"k$i", i, s"v$i")).toDF(),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 32, statsCols = Seq("lsn"))
+    MaterializedTable.merge(s2, dir, Seq(ev("update", "k1", 100, "v1b")).toDF(),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 32, statsCols = Seq("lsn"))
+    val live = MaterializedTable.readManifest(s2, dir).get.buckets
+    assert(live.values.toSet.size >= 2, s"buckets span two version dirs: $live")
+
+    val built = Map[String, () => DataFrame](
+      "lookup" -> (() => MaterializedTable.lookup(s2, dir, Seq("k1"))),
+      "readPruned" -> (() =>
+        MaterializedTable.readPruned(s2, dir, col("key") === "k2")),
+      "read" -> (() => MaterializedTable.read(s2, dir)),
+      "readVersion" -> (() => MaterializedTable.readVersion(s2, dir, 1L)),
+      "changeFeed" -> (() =>
+        MaterializedTable.changeFeed(s2, dir, 1L, 2L, Seq("key"))))
+      .map { case (face, build) => face -> jobsOf(s2)(build()) }
+    assert(built.values.forall(_ == 0), s"jobs run while building: $built")
+    def collected(df: => DataFrame): (Int, Seq[(String, String)]) = {
+      var got: Seq[(String, String)] = Nil
+      val jobs = jobsOf(s2) {
+        got = df.select("key", "after").as[(String, String)].collect().toSeq.sorted }
+      (jobs, got)
+    }
+    assert(collected(MaterializedTable.lookup(s2, dir, Seq("k1"))) ==
+      ((0, Seq(("k1", "v1b")))), "a lookup's collect runs no job")
+    assert(collected(MaterializedTable.readPruned(s2, dir,
+      col("key").isin("k2", "k3") && col("lsn") < 50L)) ==
+      ((0, Seq(("k2", "v2"), ("k3", "v3")))), "a pruned read's collect runs no job")
+    // empty reads: a key whose bucket holds nothing, and no bucket kept
+    val absent = bucketsOf(s2, (17 to 200).map(i => s"k$i"), 32)
+      .collectFirst { case (k, b) if !live.contains(b) => k }.get
+    assert(collected(MaterializedTable.lookup(s2, dir, Seq(absent))) == ((0, Nil)),
+      s"an empty bucket's lookup ($absent) runs no job")
+    assert(collected(MaterializedTable.readPruned(s2, dir, col("lsn") > 1000L)) ==
+      ((0, Nil)), "a pruned read that keeps no bucket runs no job")
+  }
+
+  test("a pruned read over more than 32 buckets lists and decodes them with no job") {
+    val s2 = spark.newSession()
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_wide_prune").toString + "/t"
+    MaterializedTable.merge(s2, dir,
+      (1 to 640).map(i => ev("insert", s"k$i", i, s"v$i")).toDF(),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 64, statsCols = Seq("lsn"))
+    val p = col("lsn") > 1L
+    val kept = MaterializedTable.matchingBuckets(s2, dir, p)
+    assert(kept.size > 32, s"fixture: the read keeps ${kept.size} buckets")
+    var df: DataFrame = null
+    assert(jobsOf(s2) { df = MaterializedTable.readPruned(s2, dir, p) } == 0,
+      "building lists the bucket directories without Spark's listing job")
+    var n = 0L
+    assert(jobsOf(s2) { n = df.collect().length.toLong } == 0, "collecting runs no job")
+    assert(n == 639L)
+  }
+
+  test("a read over the driver bound takes the executor path with the driver path's rows") {
+    val s2 = spark.newSession()
+    val dir = java.nio.file.Files.createTempDirectory("mt_bound").toString + "/t"
+    // 256 hex chars a row barely compress, so each of the two buckets holds
+    // about 3 MiB: one fits the bound, both do not
+    val key = col("id").cast("string")
+    val rows = s2.range(22000).select(lit("insert").as("op"), key.as("key"),
+      col("id").as("lsn"), lit(0L).as("seq"),
+      pmod(hash(key), lit(2)).as("zone"),
+      concat((1 to 4).map(i => sha2(concat(key, lit(s"#$i")), 256)): _*).as("pad"))
+    MaterializedTable.merge(s2, dir, rows, Seq("key"), Seq("lsn", "seq"),
+      numBuckets = 2, statsCols = Seq("zone"))
+    val m = MaterializedTable.readManifest(s2, dir).get
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(s2.sparkContext.hadoopConfiguration)
+    def bytes(b: Int): Long = fs.getContentSummary(
+      new org.apache.hadoop.fs.Path(s"$dir/v${m.buckets(b)}/_bucket=$b")).getLength
+    val bound = MaterializedTable.driverReadMaxBytes
+    assert(bytes(0) <= bound && bytes(1) <= bound && bytes(0) + bytes(1) > bound,
+      s"fixture: buckets of ${bytes(0)} and ${bytes(1)} bytes around $bound")
+
+    def local(df: DataFrame): Boolean = df.queryExecution.analyzed.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    def sorted(df: DataFrame): Seq[org.apache.spark.sql.Row] =
+      df.collect().toSeq.sortBy(_.getAs[String]("key"))
+    val both = MaterializedTable.readPruned(s2, dir, col("zone") >= 0)
+    assert(!local(both), "two buckets exceed the bound: the executor read")
+    for (z <- 0 to 1) {
+      val one = MaterializedTable.readPruned(s2, dir, col("zone") === z)
+      assert(local(one), s"zone $z: one bucket is decoded on the driver")
+      assert(one.schema == both.schema)
+      assert(sorted(one) == sorted(both.filter(col("zone") === z)), s"zone $z rows")
+    }
+    assert(MaterializedTable.lookup(s2, dir, Seq("7")).collect().toSeq ==
+      both.filter(col("key") === "7").collect().toSeq)
+  }
+
+  test("a thousand driver-path lookups leave driver heap and storage memory flat") {
+    val s2 = spark.newSession()
+    import s2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("mt_leak").toString + "/t"
+    MaterializedTable.merge(s2, dir,
+      (1 to 64).map(i => ev("insert", s"k$i", i, s"v$i")).toDF(),
+      Seq("key"), Seq("lsn", "seq"), numBuckets = 4)
+    def lookups(n: Int): Unit = (1 to n).foreach { i =>
+      val k = s"k${i % 64 + 1}"
+      assert(MaterializedTable.lookup(s2, dir, Seq(k)).select("key").collect()
+        .map(_.getString(0)).toSeq == Seq(k))
+    }
+    // every reader function broadcasts the Hadoop conf; the ContextCleaner
+    // removes an unreferenced broadcast once a GC has collected it
+    def settled(): (Long, Long, Int) = {
+      val deadline = System.nanoTime() + 20000000000L
+      var (last, b) = (-1, org.apache.spark.DriverStorage.broadcastBlocks)
+      while (b != last && System.nanoTime() < deadline) {
+        System.gc()
+        Thread.sleep(300)
+        last = b
+        b = org.apache.spark.DriverStorage.broadcastBlocks
+      }
+      val rt = Runtime.getRuntime
+      (rt.totalMemory - rt.freeMemory, org.apache.spark.DriverStorage.memoryUsed, b)
+    }
+    // the warm-up also fills Spark's bounded per-query bookkeeping (the SQL
+    // status store keeps the last 1,000 executions)
+    lookups(1000)
+    val (heap0, storage0, broadcasts0) = settled()
+    lookups(1000)
+    val (heap1, storage1, broadcasts1) = settled()
+    val mib = 1L << 20
+    info(s"heap ${heap0 / mib} -> ${heap1 / mib} MiB, storage memory " +
+      s"$storage0 -> $storage1 bytes, broadcast blocks $broadcasts0 -> $broadcasts1")
+    assert(broadcasts1 <= broadcasts0, "every reader broadcast is cleaned")
+    assert(storage1 - storage0 < mib, s"storage memory $storage0 -> $storage1")
+    assert(heap1 - heap0 < 32 * mib, s"heap $heap0 -> $heap1")
+  }
+
+  /** `check` under the vectorized parquet reader, then under the row-based
+    * one; both widen the same types.
+    */
+  private def underBothReaders(s: SparkSession)(check: String => Unit): Unit =
+    for (vectorized <- Seq("true", "false")) {
+      s.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+      check(s"vectorized=$vectorized")
+    }
+
+  /** `lookup` through the executor read it falls back to over the driver
+    * bound: the key's bucket through `readBuckets`.
+    */
+  private def lookupOnExecutors(s: SparkSession, dir: String, key: String,
+      bucket: Int): DataFrame = {
+    val m = MaterializedTable.readManifest(s, dir).get
+    MaterializedTable.readBuckets(s, dir, m, Seq(bucket))
+      .filter(col("key") === key).drop("_bucket")
   }
 
   test("type widening across versions: old int files read exactly under the manifest's long") {
@@ -701,15 +829,25 @@ class MaterializedTableSpec extends AnyFunSuite {
       assert(df.schema("v").dataType == org.apache.spark.sql.types.LongType)
       df.select("key", "v").as[(String, Long)].collect().toMap
     }
-    assert(values(MaterializedTable.read(s2, dir)) == Map("k1" -> 7L, k2 -> big))
-    assert(values(MaterializedTable.lookup(s2, dir, Seq("k1"))) == Map("k1" -> 7L))
-    assert(values(MaterializedTable.readVersion(s2, dir, 2L)) ==
-      Map("k1" -> 7L, k2 -> big))
-    // a long bound past the int range is not truncated against the int file
-    assert(values(MaterializedTable.readPruned(s2, dir, col("v") > 4000000000L)) ==
-      Map(k2 -> big))
-    assert(values(MaterializedTable.readPruned(s2, dir, col("v") < 4000000000L)) ==
-      Map("k1" -> 7L))
+    underBothReaders(s2) { label =>
+      assert(values(MaterializedTable.read(s2, dir)) == Map("k1" -> 7L, k2 -> big),
+        label)
+      assert(values(MaterializedTable.readVersion(s2, dir, 2L)) ==
+        Map("k1" -> 7L, k2 -> big), label)
+      // the driver path (the public faces), then the executor path
+      for ((path, lookupK1, pruned) <- Seq(
+          ("driver", () => MaterializedTable.lookup(s2, dir, Seq("k1")),
+            MaterializedTable.readPruned _),
+          ("executor", () => lookupOnExecutors(s2, dir, "k1", bucket("k1")),
+            MaterializedTable.readPrunedOnExecutors _))) {
+        assert(values(lookupK1()) == Map("k1" -> 7L), s"$path, $label")
+        // a long bound past the int range is not truncated against the int file
+        assert(values(pruned(s2, dir, col("v") > 4000000000L)) == Map(k2 -> big),
+          s"$path, $label")
+        assert(values(pruned(s2, dir, col("v") < 4000000000L)) == Map("k1" -> 7L),
+          s"$path, $label")
+      }
+    }
   }
 
   test("a widening the parquet reader cannot do (long to double) rewrites the old buckets") {
@@ -735,11 +873,18 @@ class MaterializedTableSpec extends AnyFunSuite {
       df.select("key", "v").as[(String, Double)].collect().toMap
     }
     val both = Map("k1" -> 7.0, k2 -> 2.5)
-    assert(values(MaterializedTable.read(s2, dir)) == both)
-    assert(values(MaterializedTable.lookup(s2, dir, Seq("k1"))) == Map("k1" -> 7.0))
-    assert(values(MaterializedTable.readVersion(s2, dir, 2L)) == both)
-    assert(values(MaterializedTable.readPruned(s2, dir, col("v") > 5.0)) ==
-      Map("k1" -> 7.0))
+    underBothReaders(s2) { label =>
+      assert(values(MaterializedTable.read(s2, dir)) == both, label)
+      assert(values(MaterializedTable.readVersion(s2, dir, 2L)) == both, label)
+      assert(values(MaterializedTable.lookup(s2, dir, Seq("k1"))) ==
+        Map("k1" -> 7.0), s"driver, $label")
+      assert(values(MaterializedTable.readPruned(s2, dir, col("v") > 5.0)) ==
+        Map("k1" -> 7.0), s"driver, $label")
+      assert(values(lookupOnExecutors(s2, dir, "k1", bucket("k1"))) ==
+        Map("k1" -> 7.0), s"executor, $label")
+      assert(values(MaterializedTable.readPrunedOnExecutors(s2, dir,
+        col("v") > 5.0)) == Map("k1" -> 7.0), s"executor, $label")
+    }
     val feed = MaterializedTable.changeFeed(s2, dir, 1L, 2L, Seq("key"))
     assert(feed.select("key", "op", "after_v").as[(String, String, Double)]
       .collect().toSet == Set((k2, "insert", 2.5)))
@@ -775,12 +920,17 @@ class MaterializedTableSpec extends AnyFunSuite {
       .as[(String, Double, Double, Long, Option[String], Seq[Long])].collect().toSet
     val old = ("k1", 3.0, 1.5, 7L, None, Seq(7L))
     // the row-based reader takes over where the vectorized one does not apply
-    for (vectorized <- Seq("true", "false")) {
-      s2.conf.set("spark.sql.parquet.enableVectorizedReader", vectorized)
+    underBothReaders(s2) { label =>
       assert(values(MaterializedTable.read(s2, dir)) ==
-        Set(old, (k2, 0.25, 2.5, big, Some("y2"), Seq(big))), s"vectorized=$vectorized")
+        Set(old, (k2, 0.25, 2.5, big, Some("y2"), Seq(big))), label)
       assert(values(MaterializedTable.lookup(s2, dir, Seq("k1"))) == Set(old),
-        s"vectorized=$vectorized")
+        s"driver, $label")
+      assert(values(MaterializedTable.readPruned(s2, dir, col("key") === "k1")) ==
+        Set(old), s"driver, $label")
+      assert(values(lookupOnExecutors(s2, dir, "k1", bucket("k1"))) == Set(old),
+        s"executor, $label")
+      assert(values(MaterializedTable.readPrunedOnExecutors(s2, dir,
+        col("key") === "k1")) == Set(old), s"executor, $label")
     }
   }
 }

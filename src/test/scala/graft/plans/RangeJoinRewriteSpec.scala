@@ -387,4 +387,40 @@ class RangeJoinRewriteSpec extends AnyFunSuite {
       old.foreach(SparkSession.setDefaultSession)
     }
   }
+
+  test("extension-built session: the same optimized plan at 10 and 100 optimizer iterations") {
+    val old = SparkSession.getDefaultSession
+    SparkSession.clearDefaultSession()
+    SparkSession.clearActiveSession()
+    val s = SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-rjr-fixed-point")
+      .config("spark.ui.enabled", "false")
+      .config("spark.graft.rangeJoin.binWidth", "8")
+      .withExtensions(new graft.GraftExtensions)
+      .getOrCreate()
+    try {
+      import s.implicits._
+      points.toDF("pid", "p").createOrReplaceTempView("rjr_p3")
+      intervals.toDF("iid", "lo", "hi").createOrReplaceTempView("rjr_i3")
+      def optimizedAt(cap: Int): (String, Long) = {
+        s.conf.set("spark.sql.optimizer.maxIterations", cap.toString)
+        val q = s.sql(
+          "SELECT pid, iid FROM rjr_p3 JOIN rjr_i3 ON p >= lo AND p <= hi")
+        val t0 = System.nanoTime()
+        val plan = q.queryExecution.optimizedPlan.toString
+        (plan.replaceAll("#\\d+", ""), (System.nanoTime() - t0) / 1000000L)
+      }
+      val (at10, _) = optimizedAt(10)
+      val (at100, ms) = optimizedAt(100)
+      assert(at10.contains("_graft_bin"), at10)
+      assert(at100 == at10, s"at 10:\n$at10\nat 100:\n$at100")
+      assert(ms < 5000, s"optimizing at 100 iterations took $ms ms")
+    } finally {
+      s.conf.unset("spark.sql.optimizer.maxIterations")
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      old.foreach(SparkSession.setDefaultSession)
+    }
+  }
 }
